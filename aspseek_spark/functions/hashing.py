@@ -67,12 +67,6 @@ def bit_positions_from_bases(
     return (h1[:, None] + h2[:, None] * ks[None, :]) % np.uint64(m_bits)
 
 
-def bit_positions(keys: "np.ndarray | list[str]", m_bits: int, k: int) -> np.ndarray:
-    """(n, k) array of bit indices for each key (string-key convenience)."""
-    h1, h2 = hash_bases(keys)
-    return bit_positions_from_bases(h1, h2, m_bits, k)
-
-
 def bloom_set(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray,
               m_bits: int, k: int) -> np.ndarray:
     """Set membership bits for hashed keys in a uint8 bit array (in place)."""

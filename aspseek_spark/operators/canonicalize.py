@@ -23,19 +23,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.urlnorm import canon1, host_of
+from ..functions.urlnorm import canon1
 
 
 @F.pandas_udf(T.StringType())
 def canon_udf(urls: pd.Series) -> pd.Series:
     return urls.map(canon1, na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
-def host_udf(url_canon: pd.Series) -> pd.Series:
-    # Arrow-batched twin of host_of — kept for API completeness; the hot
-    # paths use host_col (JVM regexp, codegen) instead.
-    return url_canon.map(host_of, na_action="ignore")
 
 
 def host_col(url_canon: str | Column = "url_canon") -> Column:

@@ -149,15 +149,3 @@ def schedule_round_split(
     if cap_leftover is not None:
         leftover = leftover.unionByName(cap_leftover.drop(*drop_extra))
     return scheduled, leftover, persisted
-
-
-def schedule_round(
-    due: DataFrame, config: CrawlConfig, round_ts: int, salt_factor: int = 8
-) -> DataFrame:
-    """Scheduled rows only (compat wrapper; no persists kept)."""
-    scheduled, _, persisted = schedule_round_split(
-        due, config, round_ts, salt_factor
-    )
-    for df in persisted:
-        df.unpersist()
-    return scheduled

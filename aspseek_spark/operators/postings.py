@@ -27,11 +27,6 @@ from pyspark.sql import functions as F
 from ..functions.hashing import spark_pmod_xxhash64
 from .textstats import tokens_col
 
-# (word, n_buckets) → bucket id memo for probe_postings_bucketed — a pure
-# function of its key (xxhash64 is deterministic), never invalidated
-_BUCKET_MEMO: dict[tuple[str, int], int] = {}
-
-
 def build_postings(
     docs: DataFrame,
     doc_col: str = "doc_id",
@@ -586,15 +581,9 @@ def probe_postings_bucketed(
     # same hash family the writer used (JVM xxhash64 seed 42 over UTF-8),
     # reproduced DRIVER-SIDE by the spec-faithful pure-Python XXH64
     # (functions/hashing.spark_pmod_xxhash64, parity-tested against the JVM
-    # bit-for-bit) and memoized — until r07 this was a 1-row Spark job per
-    # probe call, ~0.2-0.3 s of pure driver latency on EVERY cold search
-    # entry (guide §1/§5: the driver should do no data work on a hot path).
-    buckets = sorted({
-        _BUCKET_MEMO.setdefault(
-            (t, n_buckets), spark_pmod_xxhash64(t, n_buckets)
-        )
-        for t in lowered
-    })
+    # bit-for-bit) — until r07 this was a 1-row Spark job per probe call,
+    # ~0.2-0.3 s of latency on EVERY cold search entry.
+    buckets = sorted({spark_pmod_xxhash64(t, n_buckets) for t in lowered})
     reader = spark.read if schema is None else spark.read.schema(schema)
     probe = reader.parquet(path).filter(
         F.col("word_bucket").isin(buckets) & F.col("word").isin(lowered)

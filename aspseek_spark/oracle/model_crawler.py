@@ -256,11 +256,6 @@ def crawl(
     return OracleResult(fetches=fetches, seen=seen, frontier=frontier)
 
 
-def fetch_order_key(f: OracleFetch) -> tuple:
-    """Canonical comparison order for a round's fetches (engine parity)."""
-    return (f.round, f.sched_unix, f.host, f.url_canon)
-
-
 def load_fixture_dicts(web_dir: str):
     """Read the webgen parquet fixtures into plain dicts (no Spark).
     pages values carry (html, content_type, last_modified) when the fixture

@@ -8,6 +8,16 @@ grows across rounds) and makes resume trivial: a killed job restarts from
 state + round_id, replays to an identical frontier / seen set / fetch order
 (resume test: tests/test_resume.py).
 
+A round's concurrent work — the leftover checkpoint beside the fetch+parse
+job, the fetched/links writes beside the seen probe, the snapshot table
+writes beside two metric counts, the frontier count beside the probe
+metrics — and the background realtime absorb all run on ONE executor owned
+by the CrawlJob (the reference's ``index`` likewise crawls a round with one
+thread pool). Each task inherits the submitting thread's Spark job group
+and local properties. A round waits for every task it submitted before it
+returns or raises, so a failed round leaves no job running and publishes
+nothing.
+
 ``CrawlJob.run_streaming`` exposes the same loop through Structured
 Streaming's foreachBatch for parity with the north_star phrasing ("each
 crawl round is a Structured-Streaming-style micro-batch"); the plain loop
@@ -16,14 +26,52 @@ is the default for deterministic ordering.
 
 from __future__ import annotations
 
+import os
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..sources.tables import StateStore
 from .crawl_round import init_state, run_round
+
+# Workers of the job's executor: the most tasks a round runs at once (the
+# four snapshot-table writes of write_round beside the n_ok and host-salt
+# counts) plus the background absorb, which may still be running. No task
+# waits on another task's future, so the pool cannot deadlock.
+_WORKERS = 7
+
+
+class _RoundTasks:
+    """The work one round hands to the job's executor. Leaving the ``with``
+    block waits for every task submitted here — on success they are
+    already done; on failure the exception propagates only once none of
+    the round's jobs is still running."""
+
+    def __init__(self, job: "CrawlJob", round_id: int):
+        self._job = job
+        self._round_id = round_id
+        self.futures: list = []
+
+    def __enter__(self) -> "_RoundTasks":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        wait(self.futures)
+
+    def submit(self, fn, *args):
+        fut = self._job._submit(fn, *args)
+        self.futures.append(fut)
+        return fut
+
+    def write(self, table: str, df: DataFrame):
+        """One snapshot-table write of this round."""
+        return self.submit(
+            self._job.store.write_table, table, self._round_id, df
+        )
 
 
 class CrawlJob:
@@ -48,16 +96,16 @@ class CrawlJob:
         # appended to its realtime tier, making just-crawled pages
         # searchable immediately (the reference's crawl-then-search cycle
         # through realtime tables; its rt_max_segments policy decides when
-        # segments fold into the main index). The periodic ABSORB runs on
-        # this single background thread (round-5 verdict next-round #3 —
-        # it used to run inline inside add_realtime, putting an
+        # segments fold into the main index). The periodic ABSORB runs in
+        # the background on the job's executor (round-5 verdict next-round
+        # #3 — it used to run inline inside add_realtime, putting an
         # O(accumulated delta) merge on the crawl round's critical path);
         # SearchJob._rt_lock serializes it against the next rounds'
         # appends, so the absorb overlaps their schedule/fetch phases and
         # only a colliding append blocks.
         self.realtime_index = realtime_index
-        self._rt_pool = None
         self._rt_absorb_fut = None
+        self._pool = None  # the job's one executor, created on first use
 
     def _tune_scan_splits(self) -> None:
         """r07 (guide §6 input split size, §2 scale-adaptive partitioning):
@@ -73,11 +121,9 @@ class CrawlJob:
         change results (row-group assignment is deterministic; all crawl
         ordering is pinned) — fetch-order/resume suites prove it."""
         try:
-            import os as _os
-
             total = 0
             for f in self.pages.inputFiles():
-                total += _os.path.getsize(
+                total += os.path.getsize(
                     f[len("file:"):] if f.startswith("file:") else f
                 )
             par = max(1, self.spark.sparkContext.defaultParallelism)
@@ -88,9 +134,20 @@ class CrawlJob:
         except Exception:
             pass  # unknown layout (e.g. live connector): keep defaults
 
-    def _submit_absorb(self) -> None:
-        from concurrent.futures import ThreadPoolExecutor
+    def _submit(self, fn, *args):
+        """Run ``fn(*args)`` on the job's executor. The task is wrapped
+        HERE, at submission, so it carries the submitting thread's Spark
+        job group and local properties — in pinned-thread mode a plain
+        pool thread would start its jobs outside them."""
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(
+                max_workers=_WORKERS, thread_name_prefix="crawl"
+            )
+        return self._pool.submit(
+            inheritable_thread_target(self.spark)(fn), *args
+        )
 
+    def _submit_absorb(self) -> None:
         # round-6 verdict "wrong" #1 (exception-loss window): never
         # overwrite a live future. A PREVIOUS absorb that already finished
         # is joined first — join_realtime RAISES a stored failure here, in
@@ -104,13 +161,7 @@ class CrawlJob:
             if not fut.done():
                 return
             self.join_realtime()
-        if self._rt_pool is None:
-            self._rt_pool = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="rt_absorb"
-            )
-        self._rt_absorb_fut = self._rt_pool.submit(
-            self.realtime_index.merge_realtime
-        )
+        self._rt_absorb_fut = self._submit(self.realtime_index.merge_realtime)
 
     def join_realtime(self) -> None:
         """Drain the background absorb (surfacing its exception, if any).
@@ -133,15 +184,15 @@ class CrawlJob:
             self._ensure_bloom_format(last)
             return
         st = init_state(self.spark, seeds, self.config)
-        self.store.write_round(
-            0, self.config,
-            frontier=st.frontier,
-            bloom=st.bloom,
-            seen_delta=st.seen_delta,
-            robots_delta=st.robots_delta,
-            fetched=None,
-            metrics=None,
-        )
+        with _RoundTasks(self, 0) as tasks:
+            self.store.write_round(
+                0, self.config,
+                frontier=st.frontier,
+                bloom=st.bloom,
+                seen_delta=st.seen_delta,
+                robots_delta=st.robots_delta,
+                submit=tasks.submit,
+            )
 
     def _ensure_bloom_format(self, last: int) -> None:
         """Rebuild the committed bloom snapshot from the exact seen table if
@@ -178,12 +229,10 @@ class CrawlJob:
         leftover backlog. ADVISORY, outside the snapshot commit on purpose:
         a missing/stale file only means a host uses the default salt — the
         schedule is salt-invariant, so correctness can't depend on it."""
-        import os as _os
-
         if not self.config.adaptive_salt:
             return None
         p = self.store._p("host_salts", round_id)
-        if not _os.path.exists(p):
+        if not os.path.exists(p):
             return None
         return self.spark.read.schema("host string, salt int").parquet(p)
 
@@ -228,81 +277,6 @@ class CrawlJob:
         robots = self.store.read_robots(prev)
         host_salts = self._read_host_salts(prev)
 
-        # early-write overlap (round-4 verdict next-round #7): fetched/links
-        # depend only on the parse checkpoint, so run_round submits their
-        # writes through this pool DURING the seen/new-urls phase; the
-        # futures are joined below before write_round publishes.
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        early_pool = _TPE(max_workers=2)
-
-        def _early_write(name, df):
-            return early_pool.submit(
-                self.store.write_table, name, round_id, df
-            )
-
-        import os
-
-        timing = os.environ.get("ASPSEEK_TIMING") == "1"
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if timing:
-                marks.append((label, time.time() - t0))
-
-        # the pool must not outlive a failed round (round-5 ADVICE low:
-        # an exception between submit and join leaked the threads and let
-        # an in-flight write race the caller's cleanup) — shutdown runs on
-        # EVERY exit; wait=True on the failure path so no write is still
-        # running when the exception propagates
-        try:
-            res = run_round(
-                self.spark, round_id, self.config,
-                frontier, seen, bloom, robots, self.pages, self.robots_src,
-                fetcher=self.fetcher, host_salts=host_salts,
-                early_write=_early_write,
-            )
-            marks.insert(0, ("plan", time.time() - t0))
-
-            # Round-2 job structure (cuts the serial barrier floor ~2×):
-            #   job A (inside run_round): scheduled.count — materializes the
-            #     frontier-scan → robots → politeness-window chain and picks
-            #     the fetch-join strategy from the measured batch size.
-            #   job B: new_urls.count — materializes fetch join, parse, bloom
-            #     probe and the seen backstop in one pass (their persists
-            #     fill during this single action, so later broadcast builds
-            #     collect cached blocks instead of re-running heavy work
-            #     inside a broadcast-build job, where AQE may coalesce to one
-            #     partition — observed 20s single-task builds in round 1).
-            #   then ALL table writes run as concurrent jobs over cached data
-            #     (the frontier write doubles as its materialization), and
-            #     the remaining metrics counts are cheap cached-scan jobs.
-            n_sched = res.n_sched  # materialized by run_round (job A)
-            mark("scheduled.materialize")
-            n_new = res.new_urls.count()
-            mark("new_urls.materialize")
-            res.frontier.persist()
-            # join the early fetched/links writes (usually already finished —
-            # they overlapped the whole seen/new-urls phase) BEFORE
-            # write_round, so the manifest publish still happens strictly
-            # after every write; a failure raises here, pre-publish
-            for fut in res.early_futures or []:
-                fut.result()
-        except BaseException:
-            early_pool.shutdown(wait=True)
-            raise
-        early_pool.shutdown(wait=False)
-        mark("early_writes.join")
-        # r07 (guide §2.6, overlap independent jobs): the metrics counts
-        # that depend ONLY on this round's checkpointed outputs — n_ok
-        # (cached parse output) and the adaptive-salt aggregate (cached
-        # leftover) — are submitted BEFORE the write phase so their job
-        # latency overlaps the table writes instead of stacking after them.
-        # Only probe metrics (reads the WRITTEN bloom parquet) and the
-        # frontier count (rides the cache its write job fills) stay
-        # post-write.
-        from concurrent.futures import ThreadPoolExecutor
-
         from ..operators.seen import bloom_metrics
 
         def _n_ok():
@@ -311,38 +285,6 @@ class CrawlJob:
         def _salts():
             if self.config.adaptive_salt and res.leftover is not None:
                 self._write_host_salts(round_id, res.leftover)
-
-        pre_pool = ThreadPoolExecutor(max_workers=2)
-        f_ok = pre_pool.submit(_n_ok)
-        f_salts = pre_pool.submit(_salts)
-        pre_pool.shutdown(wait=False)
-        try:
-            self.store.write_round(
-                round_id, self.config,
-                frontier=res.frontier,
-                bloom=res.bloom,
-                seen_delta=res.seen_delta,
-                robots_delta=res.robots_delta,
-                fetched=None if res.early_futures else res.fetched,
-                metrics=None,  # written below from committed-state counts
-                links=None if res.early_futures else res.links,
-                on_table_written=mark if timing else None,
-            )
-        except BaseException:
-            # never leak the overlapped metric jobs past a failed round
-            # (round-5 ADVICE: no pool outlives its round) — drain, then
-            # surface the WRITE failure, not a secondary metric error
-            for f in (f_ok, f_salts):
-                try:
-                    f.result()
-                except Exception:
-                    pass
-            raise
-        # remaining metrics: probe scalars (need the written bloom) and the
-        # frontier count (cache filled by its write job) — still concurrent
-        # with each other; n_ok/salts joined from the pre-write overlap
-        def _frontier_size():
-            return res.frontier.count()  # cached by its write job
 
         def _probe_metrics():
             # distributed: per-blob fill ratios were computed next to the
@@ -356,14 +298,50 @@ class CrawlJob:
                 return 0.0, int(row["keys"] or 0)
             return bloom_metrics(self.store.read_bloom(round_id))
 
-        with ThreadPoolExecutor(max_workers=2) as mpool:
-            f_size = mpool.submit(_frontier_size)
-            f_probe = mpool.submit(_probe_metrics)
-            frontier_size = f_size.result()
+        # Job structure (cuts the serial barrier floor ~2×):
+        #   job A (inside run_round): the schedule checkpoint — frontier
+        #     scan → robots → politeness windows; its count picks the
+        #     fetch-join strategy from the measured batch size.
+        #   job B (inside run_round): the parse checkpoint — fetch join
+        #     and parse, run once; the fetched/links writes start right
+        #     after it and overlap job C.
+        #   job C: new_urls — bloom probe and seen backstop over job B's
+        #     blocks; run_round also joins the leftover checkpoint, which
+        #     overlapped job B.
+        #   then ALL snapshot writes run as concurrent jobs over cached data
+        #     (the frontier write doubles as its materialization). n_ok and
+        #     the adaptive-salt aggregate read only checkpointed outputs, so
+        #     they overlap the writes; the probe metrics (read the WRITTEN
+        #     bloom) and the frontier count (rides the cache its write job
+        #     fills) run after them, beside each other.
+        with _RoundTasks(self, round_id) as tasks:
+            res = run_round(
+                self.spark, round_id, self.config,
+                frontier, seen, bloom, robots, self.pages, self.robots_src,
+                fetcher=self.fetcher, host_salts=host_salts, tasks=tasks,
+            )
+            n_new = res.new_urls.count()
+            res.frontier.persist()
+            # the fetched/links writes finish before write_round, so the
+            # manifest publish happens strictly after every write of the
+            # round; a failure raises here, pre-publish
+            for fut in tasks.futures:
+                fut.result()
+            f_ok = tasks.submit(_n_ok)
+            f_salts = tasks.submit(_salts)
+            self.store.write_round(
+                round_id, self.config,
+                frontier=res.frontier,
+                bloom=res.bloom,
+                seen_delta=res.seen_delta,
+                robots_delta=res.robots_delta,
+                submit=tasks.submit,
+            )
+            f_probe = tasks.submit(_probe_metrics)
+            frontier_size = res.frontier.count()  # cached by its write job
             fill, bloom_keys = f_probe.result()
-        n_ok = f_ok.result()
-        f_salts.result()
-        mark("metrics.concurrent")
+            n_ok = f_ok.result()
+            f_salts.result()
         elapsed = time.time() - t0
         # partitioned-frontier write amplification evidence: bytes this
         # round actually wrote vs the whole frontier's on-disk footprint
@@ -386,7 +364,7 @@ class CrawlJob:
                     )
         metrics = {
             "round": round_id,
-            "urls_scheduled": n_sched,
+            "urls_scheduled": res.n_sched,
             "urls_fetched_ok": n_ok,
             "new_urls": n_new,
             "frontier_size": frontier_size,
@@ -396,9 +374,9 @@ class CrawlJob:
             "frontier_bytes_written": written,
             "frontier_bytes_total": total,
         }
-        self.spark.createDataFrame([Row(**metrics)]).write.mode(
-            "overwrite"
-        ).parquet(self.store._p("metrics", round_id))
+        self.store.write_table(
+            "metrics", round_id, self.spark.createDataFrame([Row(**metrics)])
+        )
         if self.realtime_index is not None:
             # a PREVIOUS background absorb that failed must fail the crawl
             # loudly, not rot silently
@@ -410,21 +388,14 @@ class CrawlJob:
             # restart-safe: a crash here only delays searchability until
             # the caller re-appends). The append is O(delta) and stays
             # synchronous; the periodic absorb does NOT (defer_merge) —
-            # it runs on the background thread and overlaps the next
-            # round instead of stepping this round's wall time.
+            # it runs in the background on the job's executor and overlaps
+            # the next round instead of stepping this round's wall time.
             self.realtime_index.add_realtime(
                 self.spark.read.parquet(self.store._p("fetched", round_id)),
                 defer_merge=True,
             )
-            mark("realtime.append")
             if self.realtime_index.needs_absorb():
                 self._submit_absorb()
-        if timing:
-            deltas = [
-                f"{label}+{t - prev:.1f}s"
-                for (label, t), (_, prev) in zip(marks, [("", 0.0)] + marks[:-1])
-            ]
-            print(f"[round {round_id} timing] " + " ".join(deltas), flush=True)
         for df in res.persisted or []:
             df.unpersist()
         res.frontier.unpersist()

@@ -54,15 +54,10 @@ class RoundResult:
     robots_delta: DataFrame
     fetched: DataFrame
     round_ts: int
-    # futures of table writes started EARLY (during the seen/new_urls
-    # phase) via run_round's early_write hook; run_one joins them before
-    # the snapshot publish
-    early_futures: list = None
     # persisted intermediates to unpersist after the snapshot commit
     persisted: list = None
     scheduled: DataFrame = None
     new_urls: DataFrame = None
-    links: DataFrame = None  # crawl link graph delta (D5/J6)
     n_sched: int = 0  # materialized while choosing the fetch-join strategy
     # due-but-over-budget rows (checkpointed): the loop derives next
     # round's adaptive per-host salts from their per-host counts
@@ -123,7 +118,7 @@ def run_round(
     truncate_lineage: bool = True,
     fetcher=None,
     host_salts: DataFrame | None = None,
-    early_write=None,
+    tasks=None,
 ) -> RoundResult:
     """truncate_lineage=False keeps the full declarative plan on every
     output (no eager jobs, no checkpoints) — used by scripts/explain_plans.py
@@ -134,26 +129,16 @@ def run_round(
     mapInPandas HTTP connector (sources/connector.py). None = simulated
     fetch join against the ``pages`` corpus.
 
-    ``early_write`` (round-4 verdict next-round #7, coordination-floor
-    shave): optional callable(table_name, DataFrame) -> Future. The
-    ``fetched`` and ``links`` outputs depend ONLY on the parse checkpoint,
-    so their table writes are submitted HERE, immediately after the parse
-    job — they overlap the seen-probe/new-urls checkpoint instead of
-    queueing behind it in the round's write phase (where write.fetched was
-    a ~1 s straggler). The returned futures ride RoundResult.early_futures;
-    the caller joins them before the snapshot publish, so commit atomicity
-    is unchanged."""
-    import os
-    import time as _time
-
-    _timing = os.environ.get("ASPSEEK_TIMING") == "1"
-    _t0 = _time.time()
-    _marks: list[tuple[str, float]] = []
-
-    def _mark(label: str) -> None:
-        if _timing:
-            _marks.append((label, _time.time() - _t0))
-
+    ``tasks`` (required when truncating): the caller's handle on its
+    executor for this round — ``tasks.submit(fn, *args)`` and
+    ``tasks.write(table, df)`` return futures the caller waits for before
+    the snapshot publish. Two pieces of the round go through it:
+      - the leftover checkpoint, which runs beside the fetch+parse job;
+      - the ``fetched`` and ``links`` table writes. They depend ONLY on the
+        parse checkpoint, so they start right after it and overlap the
+        seen-probe/new-urls checkpoint instead of queueing behind it in the
+        round's write phase (where the fetched write was a ~1 s straggler).
+    """
     round_ts = config.round_ts_unix(round_id)
 
     # ---- SRC1 frontier scan: due vs not-due (predicates push to parquet).
@@ -213,21 +198,13 @@ def run_round(
     #     checkpoint executes through the stage persists, so nothing is
     #     computed twice; durability stays with the per-round snapshot
     #     commit (StateStore), not these ephemeral blocks.
-    _mark("build.schedule")
-    leftover_fut = None
     if truncate_lineage:
         scheduled = scheduled.localCheckpoint()  # the one real schedule job
-        _mark("job.schedule_ckpt")
         # leftover is only consumed at frontier-write/host-salt time, so its
         # (cache-backed) checkpoint job runs CONCURRENTLY with the fetch+
         # parse job below instead of adding its latency to the round floor
-        from concurrent.futures import ThreadPoolExecutor
-
-        _lo_pool = ThreadPoolExecutor(1)
-        leftover_fut = _lo_pool.submit(leftover.localCheckpoint)
-        _lo_pool.shutdown(wait=False)
+        leftover_fut = tasks.submit(leftover.localCheckpoint)
         n_sched = scheduled.count()  # RDD block count — trivial
-        _mark("job.n_sched")
     else:
         n_sched = 0  # plan-inspection mode: nothing executes
 
@@ -355,7 +332,6 @@ def run_round(
         # cached anywhere (round-2 OOM lesson: columnar-caching ~1 GB of
         # html blew a 16g heap while building cache buffers).
         parsed = parsed.localCheckpoint()
-        _mark("job.parse_ckpt")
 
     # ---- href explosion → candidates (canonical already; dedup per round).
     # J4: redirect targets re-enter at the PARENT depth (no hop cost);
@@ -411,11 +387,9 @@ def run_round(
     )
     # both depend only on the (checkpointed) parse output — start their
     # table writes NOW so they overlap the seen/new-urls work below
-    early_futures: list = []
-    if early_write is not None and truncate_lineage:
-        early_futures.append(early_write("fetched", fetched))
-        early_futures.append(early_write("links", link_graph))
-        _mark("build.early_writes_submitted")
+    if truncate_lineage:
+        tasks.write("fetched", fetched)
+        tasks.write("links", link_graph)
 
     cand = (
         links.groupBy("url_canon")
@@ -444,12 +418,9 @@ def run_round(
     new_urls = seen_filter_new(
         cand, bloom, seen, config, persisted_out=extra_persisted
     )
-    _mark("build.seen")
     if truncate_lineage:
         new_urls = new_urls.localCheckpoint()
-        _mark("job.new_urls_ckpt")
         leftover = leftover_fut.result()  # overlapped with parse above
-        _mark("job.leftover_join")
 
     new_frontier_rows = new_urls.select(
         "url_canon",
@@ -508,12 +479,6 @@ def run_round(
         "round_added", F.lit(round_id)
     )
     new_bloom = probe_add(new_urls, bloom, config)
-    if _timing:
-        deltas = [
-            f"{label}+{t - prev:.1f}s"
-            for (label, t), (_, prev) in zip(_marks, [("", 0.0)] + _marks[:-1])
-        ]
-        print(f"[run_round {round_id}] " + " ".join(deltas), flush=True)
 
     return RoundResult(
         frontier=new_frontier,
@@ -522,13 +487,11 @@ def run_round(
         robots_delta=robots_delta,
         fetched=fetched,
         round_ts=round_ts,
-        early_futures=early_futures,
         persisted=[robots_delta, due_hosts, due]
         + ([found_urls] if found_urls is not None else [])
         + sched_persisted + extra_persisted,
         scheduled=scheduled,
         new_urls=new_urls,
-        links=link_graph,
         n_sched=n_sched,
         leftover=leftover,
     )

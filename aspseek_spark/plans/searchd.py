@@ -24,7 +24,8 @@ searchd split re-expressed; deliberately netcat-debuggable):
                                "wrong" #2: the daemon NEVER collects an
                                unbounded hit set — every Q/QP serves a
                                bounded TakeOrdered window, the reference's
-                               paged result window (ps=/np= in s.cgi))
+                               paged result window (ps=/np= in s.cgi));
+                               ERR unless (page+1)*size <= max_page_size
     R <terms...>               rendered results page (s.htm template)
       → PAGE <nbytes>\\n  then exactly nbytes of UTF-8 HTML, then .\\n
     S                          daemon/qcache stats
@@ -105,9 +106,12 @@ class _Handler(socketserver.StreamRequestHandler):
         except ValueError:
             self._err("usage: QP <page> <size> <query>")
             return
-        if page < 0 or not (0 < size <= daemon.max_page_size):
+        # the window END is capped too: the daemon collects (page+1)·size
+        # rows, so a far page of small windows is as costly as a big window
+        if page < 0 or size <= 0 or (page + 1) * size > daemon.max_page_size:
             self._err(
-                f"page must be >= 0 and 0 < size <= {daemon.max_page_size}"
+                f"need page >= 0, size > 0 and (page+1)*size <= "
+                f"{daemon.max_page_size}"
             )
             return
         self._serve_page(daemon, parts[2], page, size)
@@ -183,7 +187,7 @@ class SearchDaemon:
         self.job = job
         self.links_to = links_to
         self.page_size = page_size  # plain-Q window (bounded by design)
-        self.max_page_size = max_page_size  # QP hard cap
+        self.max_page_size = max_page_size  # QP hard cap on the window end
         self._host = host
         self._port = port
         self._server: _Server | None = None

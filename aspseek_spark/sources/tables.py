@@ -138,10 +138,6 @@ class StateStore:
         with open(self._manifest_path) as f:
             return json.load(f)["last_round"]
 
-    def load_config(self) -> CrawlConfig:
-        with open(self._manifest_path) as f:
-            return CrawlConfig.from_json(json.dumps(json.load(f)["config"]))
-
     def _publish(
         self,
         round_id: int,
@@ -167,14 +163,13 @@ class StateStore:
         return os.path.join(self.root, table, f"round={round_id}")
 
     def write_table(self, name: str, round_id: int, df) -> None:
-        """One plain snapshot-table write — the early-write overlap path
-        (plans/crawl_round ``early_write``): fetched/links writes start
-        during the seen/new-urls phase instead of the write pool. Running
-        pre-publish is safe for the same reason the in-pool bucketed-seen
-        append is: round logic is deterministic (a crashed-then-retried
-        round re-derives and overwrites the same delta) and every reader
-        gates on the committed manifest, so files from an uncommitted
-        attempt are invisible."""
+        """One plain snapshot-table write. The fetched/links writes run
+        before write_round, during the seen/new-urls phase
+        (plans/crawl_round). Running pre-publish is safe for the same
+        reason the chained bucketed-seen append is: round logic is
+        deterministic (a crashed-then-retried round re-derives and
+        overwrites the same delta) and every reader gates on the committed
+        manifest, so files from an uncommitted attempt are invisible."""
         df.write.mode("overwrite").parquet(self._p(name, round_id))
 
     # -- partitioned frontier (SNK1: rounds rewrite only touched fparts) -----
@@ -400,47 +395,34 @@ class StateStore:
         bloom: DataFrame,
         seen_delta: DataFrame,
         robots_delta: DataFrame,
-        fetched: DataFrame | None,
-        metrics: DataFrame | None,
-        links: DataFrame | None = None,
-        on_table_written=None,
+        *,
+        submit,
     ) -> None:
-        def _done(label: str) -> None:
-            if on_table_written is not None:
-                on_table_written(f"write.{label}")
+        """Write round ``round_id``'s snapshot tables, then publish it.
+        (The round's fetched and links tables are written before this, by
+        plans/crawl_round; its metrics row after, by plans/crawl_loop.)
 
-        # The snapshot's six tables are independent once the shared upstream
-        # lineage is materialized (the caller persists + counts it first), so
-        # their write jobs are submitted CONCURRENTLY — Spark schedules
-        # concurrent jobs fine, and overlapping the per-job fixed latencies
-        # cuts the serial floor of a round by ~3×. The manifest publish
-        # (the commit point) still happens strictly after every write.
-        from concurrent.futures import ThreadPoolExecutor
-
-        jobs: list[tuple[str, DataFrame]] = [
-            ("bloom", bloom),
-            ("seen_delta", seen_delta),
-            ("robots_delta", robots_delta),
-        ]
-        if fetched is not None:
-            jobs.append(("fetched", fetched))
-        if links is not None:
-            jobs.append(("links", links))
-
+        The tables are independent once the shared upstream lineage is
+        materialized (the caller persists + counts it first), so their
+        write jobs run CONCURRENTLY through ``submit(fn, *args) -> Future``
+        on the caller's executor — overlapping the per-job fixed latencies
+        cuts the serial floor of a round by ~3×. The manifest publish (the
+        commit point) happens strictly after every write; a failed write
+        raises before it, and the caller waits for the writes still
+        running."""
         new_map: dict[int, int] = {}
 
-        def _write(item: tuple[str, DataFrame]) -> None:
-            name, df = item
+        def _write(name: str, df: DataFrame) -> None:
             if name == "frontier":
                 # partitioned write: only touched fparts (see module doc)
                 new_map.update(
                     self._write_frontier_partitioned(round_id, config, df)
                 )
-            elif name == "seen_delta":
-                df.write.mode("overwrite").parquet(self._p(name, round_id))
-                _done(name)
+                return
+            self.write_table(name, round_id, df)
+            if name == "seen_delta":
                 # chain the bucketed-backstop append onto the delta write,
-                # INSIDE the pool so its latency overlaps the other table
+                # in the same task so its latency overlaps the other table
                 # writes. Running it pre-publish is safe: round logic is
                 # deterministic (a retried round re-derives the same delta),
                 # the table is consumed membership-only, and every read
@@ -449,26 +431,25 @@ class StateStore:
                 # round actually commits, and the marker stops them from
                 # being appended twice.
                 self._sync_seen_bucketed(round_id, config)
-                name = "seen_bucketed"
-            else:
-                df.write.mode("overwrite").parquet(self._p(name, round_id))
-            _done(name)
 
-        with ThreadPoolExecutor(max_workers=len(jobs) + 1) as pool:
-            # list() re-raises any write failure before the manifest publish
-            list(pool.map(_write, [("frontier", frontier)] + jobs))
+        tables = (
+            ("frontier", frontier),
+            ("bloom", bloom),
+            ("seen_delta", seen_delta),
+            ("robots_delta", robots_delta),
+        )
+        for fut in [submit(_write, name, df) for name, df in tables]:
+            fut.result()
 
-        if metrics is not None:
-            metrics.write.mode("overwrite").parquet(self._p("metrics", round_id))
         # keep the previous round's map for time travel (resume window = 2)
         kept_maps = {round_id: new_map}
         prev_map = self.frontier_map(round_id - 1)
         if prev_map is not None:
             kept_maps[round_id - 1] = prev_map
         self._publish(round_id, config, frontier_maps=kept_maps)
-        # (bucketed-seen sync already ran inside the write pool, chained on
-        # the seen_delta write; a crash anywhere is healed by
-        # read_seen_bucketed's marker-driven catch-up)
+        # (bucketed-seen sync already ran chained on the seen_delta write;
+        # a crash anywhere is healed by read_seen_bucketed's marker-driven
+        # catch-up)
         # snapshot GC (Iceberg: expire_snapshots): unreferenced frontier
         # version dirs + all-but-last-2 bloom snapshots (and any legacy
         # whole-snapshot frontier dirs from pre-partitioning stores)

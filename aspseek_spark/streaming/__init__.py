@@ -3,6 +3,5 @@
 The crawl loop's streaming face lives in plans.crawl_loop.CrawlJob
 .run_streaming (foreachBatch over a tick stream → one committed crawl round
 per batch). This package adds the stream-analytics operators a live crawl
-emits: windowed fetch-rate metrics with watermarked late-data handling and
-a stateful per-host politeness monitor.
+emits: windowed fetch-rate metrics with watermarked late-data handling.
 """

@@ -4,12 +4,9 @@ fetched stream with watermarks for late events.
 The reference's `index -S` statistics are batch counts over MySQL; a live
 deployment wants them as a stream. These operators read the ``fetched``
 table directory as a file stream (new round partitions appear as files —
-exactly how the snapshot commit publishes them) and maintain:
-
-  - per-window fetch counts / status breakdown (tumbling window on
-    sched time, watermark bounds state)
-  - per-host politeness monitor: max fetches per host per window —
-    alerting if any host exceeds budget (invariant W1 enforces)
+exactly how the snapshot commit publishes them) and maintain per-window
+fetch counts / status breakdown (tumbling window on sched time, watermark
+bounds state).
 
 Batch parity: each streaming aggregation has the identical batch
 expression, and tests drive the stream with availableNow + memory sink and
@@ -101,26 +98,6 @@ def windowed_fetch_rates_batch(fetched: DataFrame, window: str = "1 hour") -> Da
             "status_class",
             "n_fetches",
             "n_hosts",
-        )
-    )
-
-
-def host_budget_monitor(
-    stream: DataFrame, budget: int, window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-(window, host) fetch counts + over-budget flag — the politeness
-    invariant as a streaming monitor."""
-    return (
-        _with_event_time(stream)
-        .withWatermark("sched_ts", watermark)
-        .groupBy(F.window("sched_ts", window).alias("w"), "host")
-        .agg(F.count("*").alias("n_fetches"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "host",
-            "n_fetches",
-            (F.col("n_fetches") > budget).alias("over_budget"),
         )
     )
 

@@ -6,8 +6,9 @@ Modes (first CLI arg):
       label jobs, print one JSON line {query: [secs...]}.
   explain [sf_dir] [outdir]   — write .explain("formatted") for each
       headline query to <outdir>/<name>.txt (the plans/r07 evidence files).
-  crawl [sf_dir]              — one bench-identical crawl leg with
-      ASPSEEK_TIMING=1 phase marks printed per round.
+
+Per-phase crawl timing: python3 perfbench/run.py --workload crawl --seed N
+--trace 1.
 
 Uses bench.build_spark / bench.ensure_bench_web so session config and the
 web fixture match the frozen harness exactly.
@@ -105,21 +106,6 @@ def mode_explain(sf_dir: str, outdir: str) -> None:
     print(f"wrote {len(HEADLINE)} plans to {outdir}")
 
 
-def mode_crawl(sf_dir: str) -> None:
-    os.environ["ASPSEEK_TIMING"] = "1"
-    spark = _spark()
-    sf = bench.sf_of(sf_dir)
-    web_dir = bench.ensure_bench_web(sf)
-    legs, t_total, urls = bench.bench_crawl(
-        spark, web_dir, warmup_rounds=2, timed_rounds=3, timed_legs=1
-    )
-    print(json.dumps({
-        "leg_secs": [round(t, 3) for t, _ in legs],
-        "leg_urls": [u for _, u in legs],
-        "total_sec": round(t_total, 3),
-    }))
-
-
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else bench.SF_DIR
@@ -129,7 +115,5 @@ if __name__ == "__main__":
         mode_queries_count(sf_dir, int(sys.argv[3]) if len(sys.argv) > 3 else 3)
     elif mode == "explain":
         mode_explain(sf_dir, sys.argv[3] if len(sys.argv) > 3 else "plans/r07")
-    elif mode == "crawl":
-        mode_crawl(sf_dir)
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -6,8 +6,9 @@ and submits ``merge_realtime`` to a single background thread, so the absorb
 overlaps the NEXT round's schedule/fetch phases instead of stepping the
 absorbing round's wall time. This script measures that: a multi-round crawl
 with an aggressive merge policy (rt_max_segments=2 → an absorb every third
-round), per-round wall times printed with ASPSEEK_TIMING-style marks, and a
-summary comparing absorb-triggering rounds against their neighbors.
+round), per-round wall times, and a summary comparing absorb-triggering
+rounds against their neighbors. For per-phase timing of a round, run
+``python3 perfbench/run.py --workload crawl --seed N --trace 1``.
 
 Run: python scripts/absorb_timing.py [n_pages] [n_rounds]
 Appends a JSON line per round plus a summary to stdout; paste the summary

@@ -549,9 +549,12 @@ def test_crawl_background_absorb(spark, tiny_web, test_config,
         spark.read.parquet(f"{tiny_web}/robots_src.parquet"),
         realtime_index=sj,
     )
+    absorbs = []
+    merge_realtime = sj.merge_realtime
+    sj.merge_realtime = lambda: absorbs.append(1) or merge_realtime()
     job.run(spark.read.parquet(f"{tiny_web}/seeds.parquet"), 3)
     # with rt_max_segments=1, rounds 1-3 triggered ≥1 background absorb
-    assert job._rt_pool is not None, "absorb must have been submitted"
+    assert absorbs, "absorb must have been submitted"
     assert len(sj._rt_segments()) <= 2
     got = _docs(sj.search_and(["engine"]))
     # fresh full build over the same fetched history == served state
@@ -566,7 +569,7 @@ def test_crawl_background_absorb(spark, tiny_web, test_config,
     assert got == _docs(ref.search_and(["engine"]))
 
 
-def test_failed_background_absorb_raises_on_next_submit():
+def test_failed_background_absorb_raises_on_next_submit(spark):
     """Round-6 verdict "wrong" #1 (exception-loss window): a FAILED
     background absorb leaves its segments in place, so needs_absorb()
     re-fires and the next round re-submits — the resubmission must SURFACE
@@ -586,7 +589,7 @@ def test_failed_background_absorb_raises_on_next_submit():
             raise RuntimeError("absorb exploded")
 
     rt = BoomRT()
-    job = CrawlJob(None, None, None, None, None, realtime_index=rt)
+    job = CrawlJob(spark, None, None, None, None, realtime_index=rt)
     job._submit_absorb()
     # wait for the background failure to land in the future
     for _ in range(100):
@@ -609,7 +612,7 @@ def test_failed_background_absorb_raises_on_next_submit():
             self.release.wait(10)
 
     slow = SlowRT()
-    job2 = CrawlJob(None, None, None, None, None, realtime_index=slow)
+    job2 = CrawlJob(spark, None, None, None, None, realtime_index=slow)
     job2._submit_absorb()
     fut = job2._rt_absorb_fut
     job2._submit_absorb()  # in-flight absorb: must be a no-op, not a clobber

@@ -150,6 +150,8 @@ def test_paged_query_windows_are_bounded(spark, tmp_path_factory):
             with _pytest.raises(RuntimeError):
                 c.query_page(0, 51, "alpha")  # size > max_page_size
             with _pytest.raises(RuntimeError):
+                c.query_page(8, 7, "alpha")  # window end 63 > max_page_size
+            with _pytest.raises(RuntimeError):
                 c.query_page(-1, 5, "alpha")
             assert c.query("alpha")  # session still serves
         finally:
