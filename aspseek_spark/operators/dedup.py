@@ -12,7 +12,7 @@ families here, Spark-first:
   simhash         — 64-bit simhash over token hashes; near-dups = equal
                     simhash (0-distance buckets) or banded chunks
   ngram_jaccard   — exact n-gram Jaccard via explode + self-join on shingle
-  embedding near-dup lives in similarity.py (cosine threshold)
+  embedding near-dup is the exact all-pairs cosine join of q43
 
 Scale notes: minhash_lsh is the 100 TB path — cost is a scan (shingle+hash,
 all codegen) plus one shuffle on (band, signature); the exact-Jaccard
@@ -23,7 +23,7 @@ the ground truth the LSH variant is tested against.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .textstats import tokens_col
@@ -326,26 +326,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
-    )
-
-
-def clone_detect(fetched: DataFrame) -> DataFrame:
-    """Reference J5 on the crawl's fetched table: same content CRC ⇒ later
-    URLs are clones of the first (Window over crc — single shuffle)."""
-    w = Window.partitionBy("content_crc").orderBy("round", "sched_unix", "url_canon")
-    return (
-        fetched.filter(F.col("status") == 200)
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn(
-            "clone_of",
-            F.when(
-                F.col("rn") > 1,
-                F.first("url_canon").over(
-                    w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                ),
-            ),
-        )
-        .drop("rn")
     )
 
 

@@ -27,6 +27,31 @@ from pyspark.sql import functions as F
 from ..functions.hashing import spark_pmod_xxhash64
 from .textstats import tokens_col
 
+# title zone = the first TITLE_TOKENS tokens when a doc has no parsed title;
+# also the excerpt rule's title window (with_excerpts / excerpt_oracle_sql)
+TITLE_TOKENS = 4
+
+# On-disk schemas of the stored index tables. build_postings /
+# build_zone_postings rows are written by write_postings_bucketed, the
+# stored-doc rows (META_COLS) by write_docs_meta. The *_READ forms add the
+# partition column: every read declares them, so no read infers a schema
+# from footers (a directory may also hold ZERO part files — a delete-only
+# realtime segment — where inference fails).
+POSTINGS_SCHEMA = "doc long, word string, positions array<int>, tf long"
+ZONE_SCHEMA = (
+    "doc long, word string, tf_title long, tf_body long, zone_mask int"
+)
+META_COLS = ["doc_id", "url", "host", "text", "title", "content_md5",
+             "fetched_unix"]
+META_SCHEMA = (
+    "doc_id long, url string, host string, text string, title string, "
+    "content_md5 string, fetched_unix long"
+)
+POSTINGS_READ = POSTINGS_SCHEMA + ", word_bucket long"
+ZONE_READ = ZONE_SCHEMA + ", word_bucket long"
+META_READ = META_SCHEMA + ", doc_bucket long"
+
+
 def build_postings(
     docs: DataFrame,
     doc_col: str = "doc_id",
@@ -483,7 +508,7 @@ def build_zone_postings(
     doc_col: str = "doc_id",
     text_col: str = "text",
     title_col: str | None = None,
-    title_tokens: int = 4,
+    title_tokens: int = TITLE_TOKENS,
 ) -> DataFrame:
     """Zone-aware postings (W4 depth, reference zone bits in word postings
     [R:src/parser.cpp] — title/meta/body weighting): (doc, word, tf_title,
@@ -560,9 +585,26 @@ def write_postings_bucketed(
     )
 
 
+def write_docs_meta(docs: DataFrame, path: str, n_buckets: int = 64) -> None:
+    """Stored-doc table (META_COLS) partitioned by doc-hash bucket
+    (doc_bucket = pmod(xxhash64(doc_id), n_buckets)): host-only readers
+    (site grouping) pay nothing for text — parquet column pruning — and an
+    excerpt probe for a page of doc ids prunes to their buckets."""
+    (
+        docs.select(*META_COLS)
+        .withColumn(
+            "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+        )
+        .repartition("doc_bucket")
+        .write.mode("overwrite")
+        .partitionBy("doc_bucket")
+        .parquet(path)
+    )
+
+
 def probe_postings_bucketed(
     spark, path: str, terms: list[str], n_buckets: int = 64,
-    schema: str | None = None,
+    schema: str = POSTINGS_READ,
 ) -> DataFrame:
     """Term probe against the BUCKETED postings layout: computes the terms'
     word-hash buckets driver-side and prunes the scan to those partition
@@ -571,10 +613,8 @@ def probe_postings_bucketed(
     stored index touches only ~len(terms)/n_buckets of it). Returns the
     matching postings rows; feed them to docs_with_all / docs_with_any.
 
-    ``schema`` (incl. the word_bucket partition column) makes the read
-    inference-free — required for directories that may hold ZERO part
-    files (a delete-only realtime segment writes an empty partitioned
-    parquet, which has no footer to infer from)."""
+    ``schema`` is the table's read schema: POSTINGS_READ, or ZONE_READ
+    for a zone index."""
     from pyspark.sql import functions as F  # local: keep module import light
 
     lowered = [t.lower() for t in terms]
@@ -584,8 +624,7 @@ def probe_postings_bucketed(
     # bit-for-bit) — until r07 this was a 1-row Spark job per probe call,
     # ~0.2-0.3 s of latency on EVERY cold search entry.
     buckets = sorted({spark_pmod_xxhash64(t, n_buckets) for t in lowered})
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    probe = reader.parquet(path).filter(
+    probe = spark.read.schema(schema).parquet(path).filter(
         F.col("word_bucket").isin(buckets) & F.col("word").isin(lowered)
     )
     return probe.drop("word_bucket")
@@ -607,7 +646,9 @@ def compact_postings(
     delete pass. Both doc sets are delta-sized → broadcast anti-joins
     against the bucketed main scan. Duplicate delta rows still merge
     (positions concatenated, tf summed)."""
-    main = spark.read.parquet(main_path).drop("word_bucket")
+    main = spark.read.schema(POSTINGS_READ).parquet(main_path).drop(
+        "word_bucket"
+    )
     delta_docs = delta.select("doc").distinct()
     main = main.join(F.broadcast(delta_docs), "doc", "left_anti")
     if drop_docs is not None:
@@ -633,7 +674,7 @@ def with_excerpts(
     text_col: str = "text",
     before: int = 5,
     width: int = 12,
-    title_tokens: int = 4,
+    title_tokens: int = TITLE_TOKENS,
 ) -> DataFrame:
     """Per-hit context excerpt — the results-page output side the reference
     renders through its templates ([R:src/templates.cpp] excerpts around
@@ -692,7 +733,7 @@ def excerpt_oracle_sql(
     terms: list[str],
     before: int = 5,
     width: int = 12,
-    title_tokens: int = 4,
+    title_tokens: int = TITLE_TOKENS,
     text_expr: str = "text",
 ) -> str:
     """DuckDB SQL fragment computing (best_term, excerpt) per row under the

@@ -7,13 +7,15 @@ that row-store probe is the scaling wall; this module re-expresses it as:
   stage 1 — partitioned bloom probe: candidates route to their bloom
       partition via ``pmod(murmur3(url_canon), P)`` (JVM-side F.hash), then a
       cogrouped ``applyInPandas`` tests membership against that partition's
-      bit blob. A bloom MISS is a definite-new URL (no false negatives) —
-      at steady state the vast majority of already-seen candidates are
-      killed here without touching the big ``seen`` table.
-  stage 2 — exact backstop: only bloom HITS ("maybe seen", ~1% of new URLs
-      at design fpp) anti-join the exact ``seen`` table on url_canon,
-      eliminating false positives. Correctness therefore never depends on
-      the bloom: it is purely a shuffle/IO reducer.
+      bit blob. A bloom MISS is a definitely-new URL (no false negatives)
+      and passes straight through without touching the big ``seen``
+      table. The bloom never drops a candidate: every already-seen URL is
+      a bloom HIT.
+  stage 2 — exact backstop: bloom HITS ("maybe seen" — every already-seen
+      candidate plus ~1% of new URLs at design fpp) anti-join the exact
+      ``seen`` table on url_canon, which removes the seen URLs and lets
+      the false positives through. The bloom therefore spares the backstop
+      the definitely-new URLs only; correctness never depends on it.
 
 Hot-path hashing is 100% JVM-side: the two Kirsch-Mitzenmacher bases are
 ``xxhash64(url)`` and ``xxhash64('h2', url)`` columns (whole-stage codegen),

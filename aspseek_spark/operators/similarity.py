@@ -204,43 +204,6 @@ def ivf_ann(
     )
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    hyperplanes: list[list[float]],
-    cosine_threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Embedding-cosine near-dup: LSH bucket self-join + exact cosine
-    verify ≥ threshold. The embedding-space member of the dedup family."""
-    cast_vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    bits = []
-    for i, h in enumerate(hyperplanes):
-        hv = F.array(*[F.lit(float(x)) for x in h])
-        bits.append(F.when(_dot(cast_vec, hv) >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    tagged = embeddings.select(F.col(id_col).alias("k"), cast_vec.alias("v"), sig.alias("bucket"))
-    pairs = (
-        tagged.alias("x")
-        .join(
-            tagged.alias("y"),
-            on=[F.col("x.bucket") == F.col("y.bucket"), F.col("x.k") < F.col("y.k")],
-        )
-        .select(
-            F.col("x.k").alias("a"),
-            F.col("y.k").alias("b"),
-            (
-                _dot(F.col("x.v"), F.col("y.v"))
-                / (_norm(F.col("x.v")) * _norm(F.col("y.v")))
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= cosine_threshold)
-    )
-    return pairs
-
-
 def ann_recall(
     approx: DataFrame,
     exact: DataFrame,

@@ -67,8 +67,9 @@ class OracleResult:
 
 
 def _page_meta(v) -> tuple[bytes, str | None, int | None, str | None]:
-    """pages values are bytes (legacy fixtures),
-    (html, content_type, last_modified), or (..., etag)."""
+    """pages values are bare html bytes (fixtures without the S7/F5
+    columns, e.g. hand-built test webs), (html, content_type,
+    last_modified), or (..., etag)."""
     if isinstance(v, (bytes, bytearray)):
         return bytes(v), None, None, None
     if len(v) == 3:

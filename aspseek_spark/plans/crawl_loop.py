@@ -90,7 +90,6 @@ class CrawlJob:
         self.config = config
         self.pages = pages
         self.robots_src = robots_src
-        self._tune_scan_splits()
         self.fetcher = fetcher  # SRC2 seam: live connector or None=simulated
         # optional SearchJob: each committed round's fetched delta is
         # appended to its realtime tier, making just-crawled pages
@@ -106,33 +105,6 @@ class CrawlJob:
         self.realtime_index = realtime_index
         self._rt_absorb_fut = None
         self._pool = None  # the job's one executor, created on first use
-
-    def _tune_scan_splits(self) -> None:
-        """r07 (guide §6 input split size, §2 scale-adaptive partitioning):
-        the pages corpus is the round's dominant scan (the fetch join reads
-        it every round), and a corpus that fits in few
-        ``maxPartitionBytes`` splits scans near-serially no matter how many
-        cores the session has — the 300k-page bench fixture is ONE 110 MB
-        file, i.e. a 1-task scan under the 128 MB default. Derive the split
-        size from the corpus size so the scan spreads over the executors:
-        target ≈ corpus/(4·parallelism), clamped to [8 MB, 128 MB] — at
-        cluster scale the clamp returns the default (no behavior change);
-        only small corpora get smaller splits. Split boundaries never
-        change results (row-group assignment is deterministic; all crawl
-        ordering is pinned) — fetch-order/resume suites prove it."""
-        try:
-            total = 0
-            for f in self.pages.inputFiles():
-                total += os.path.getsize(
-                    f[len("file:"):] if f.startswith("file:") else f
-                )
-            par = max(1, self.spark.sparkContext.defaultParallelism)
-            tgt = max(8 << 20, min(128 << 20, total // (4 * par)))
-            self.spark.conf.set(
-                "spark.sql.files.maxPartitionBytes", str(tgt)
-            )
-        except Exception:
-            pass  # unknown layout (e.g. live connector): keep defaults
 
     def _submit(self, fn, *args):
         """Run ``fn(*args)`` on the job's executor. The task is wrapped

@@ -56,6 +56,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.postings import (
+    META_COLS,
+    META_READ,
+    META_SCHEMA,
+    POSTINGS_READ,
+    POSTINGS_SCHEMA,
+    ZONE_READ,
+    ZONE_SCHEMA,
     build_postings,
     build_zone_postings,
     compact_postings,
@@ -70,30 +77,9 @@ from ..operators.postings import (
     rank_results,
     rank_zone_weighted,
     with_excerpts,
+    write_docs_meta,
     write_postings_bucketed,
 )
-
-# explicit schemas for the empty-index case (realtime segments may exist
-# before any main build) — must match build_postings / build_zone_postings
-_POSTINGS_SCHEMA = "doc long, word string, positions array<int>, tf long"
-_ZONE_SCHEMA = (
-    "doc long, word string, tf_title long, tf_body long, zone_mask int"
-)
-_META_COLS = ["doc_id", "url", "host", "text", "title", "content_md5",
-              "fetched_unix"]
-_META_SCHEMA = (
-    "doc_id long, url string, host string, text string, title string, "
-    "content_md5 string, fetched_unix long"
-)
-_META_TYPES = {
-    "doc_id": "long", "url": "string", "host": "string", "text": "string",
-    "title": "string", "content_md5": "string", "fetched_unix": "long",
-}
-# read schemas incl. the partition column — segment directories can hold
-# ZERO part files (delete-only segments), where schema inference fails
-_POSTINGS_READ = _POSTINGS_SCHEMA + ", word_bucket long"
-_ZONE_READ = _ZONE_SCHEMA + ", word_bucket long"
-_META_READ = _META_SCHEMA + ", doc_bucket long"
 
 
 def _indexable_docs(fetched: DataFrame) -> DataFrame:
@@ -211,7 +197,7 @@ class SearchJob:
     def _vpath(self, base: str) -> str:
         v = self._live_version()
         if v is None:
-            # pre-versioning layout (or not yet built)
+            # not built yet: a path no reader finds a directory at
             return os.path.join(self.root, base)
         return os.path.join(self.root, f"{base}_v{v}")
 
@@ -222,25 +208,8 @@ class SearchJob:
     @property
     def zone_path(self) -> str:
         """Zone index (tf_title/tf_body per doc-word) — versioned under the
-        SAME pointer as the main index since round 5 (round-4 verdict fix
-        #1: the unversioned zone index was overwritten in place and never
-        merged, so zone-ranked search served stale/deleted docs)."""
+        SAME pointer as the main index, so a merge moves it in lockstep."""
         return self._vpath("zone_postings")
-
-    def _zone_read_path(self) -> str:
-        """Zone dir to READ (round-5 ADVICE low): an index built before
-        zone versioning has the pointer set but its zone table at the
-        legacy unversioned ``zone_postings`` — resolving only the
-        versioned name would crash merge_delta's zone read and make
-        _probe_main silently serve an EMPTY zone index. Fall back to the
-        legacy dir when the versioned one is absent; the next merge writes
-        the zone versioned and _gc_versions retires the legacy layout."""
-        p = self.zone_path
-        if not os.path.isdir(p):
-            legacy = os.path.join(self.root, "zone_postings")
-            if os.path.isdir(legacy):
-                return legacy
-        return p
 
     @property
     def meta_path(self) -> str:
@@ -273,25 +242,15 @@ class SearchJob:
                 shutil.rmtree(
                     os.path.join(self.root, f"{base}{k}"), ignore_errors=True
                 )
-        if newest >= 1:
-            for legacy in ("postings", "zone_postings", "docs_meta"):
-                shutil.rmtree(
-                    os.path.join(self.root, legacy), ignore_errors=True
-                )
 
     # -- build / refresh -----------------------------------------------------
-    def build_from_fetched(
-        self,
-        fetched: DataFrame,
-        stopwords: list[str] | None = None,
-        title_tokens: int = 4,
-    ) -> None:
+    def build_from_fetched(self, fetched: DataFrame) -> None:
         """One tokenize pass over the crawl output → stored bucketed index.
         At 100 TB this is the only corpus-sized job; every query afterwards
         is a pruned probe. The title zone uses the REAL parsed <title>
         column when the fetched table carries one (the crawl does —
         operators/parse.py emits it); fixtures without it keep the
-        documented first-``title_tokens``-tokens proxy.
+        documented first-TITLE_TOKENS-tokens proxy.
 
         The delete pass applies HERE too (round-5 ADVICE high): a URL
         fetched 200 in an early round and 404/410 in a later one must not
@@ -305,45 +264,23 @@ class SearchJob:
             gone.select(F.col("doc").alias("doc_id")), "doc_id", "left_anti"
         )
         title_col = "title" if "title" in fetched.columns else None
-        postings = build_postings(docs, "doc_id", "text", stopwords)
+        postings = build_postings(docs, "doc_id", "text")
         v = self._live_version()
         nxt = 0 if v is None else v + 1
         new_dir = os.path.join(self.root, f"postings_v{nxt}")
         shutil.rmtree(new_dir, ignore_errors=True)  # crashed prior attempt
         write_postings_bucketed(postings, new_dir, self.n_buckets)
-        zp = build_zone_postings(
-            docs, "doc_id", "text", title_col=title_col,
-            title_tokens=title_tokens,
-        )
+        zp = build_zone_postings(docs, "doc_id", "text", title_col=title_col)
         zone_dir = os.path.join(self.root, f"zone_postings_v{nxt}")
         shutil.rmtree(zone_dir, ignore_errors=True)
         write_postings_bucketed(zp, zone_dir, self.n_buckets)
-        self._write_meta(
-            docs.select(*_META_COLS),
-            os.path.join(self.root, f"docs_meta_v{nxt}"),
+        write_docs_meta(
+            docs, os.path.join(self.root, f"docs_meta_v{nxt}"), self.n_buckets
         )
         self._flip_to(nxt)
         self._gc_versions(nxt)
 
-    def _write_meta(self, docs: DataFrame, path: str) -> None:
-        """Stored-doc table partitioned by doc-hash bucket. host-only
-        readers (site grouping) pay nothing for text — parquet column
-        pruning — and the excerpt probe prunes partitions."""
-        shutil.rmtree(path, ignore_errors=True)
-        (
-            docs.withColumn(
-                "doc_bucket",
-                F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)),
-            )
-            .repartition("doc_bucket")
-            .write.mode("overwrite")
-            .partitionBy("doc_bucket")
-            .parquet(path)
-        )
-
-    def merge_delta(
-        self, fetched_delta: DataFrame, title_tokens: int = 4
-    ) -> None:
+    def merge_delta(self, fetched_delta: DataFrame) -> None:
         """LSM merge (SNK2): tokenize only the delta, merge into the next
         index GENERATION — main postings, ZONE postings and the stored-text
         table all move together — then atomically flip the pointer file
@@ -353,12 +290,10 @@ class SearchJob:
         replaced generation survives one merge for in-flight readers
         (round-3 ADVICE fix — the old rename/rename swap had both a no-dir
         window and a reader-error window)."""
-        if self._live_version() is None and not os.path.isdir(
-            os.path.join(self.root, "postings")
-        ):
+        if self._live_version() is None:
             # nothing to merge into (all data arrived via the realtime
             # tier): the merge IS the initial build
-            self.build_from_fetched(fetched_delta, title_tokens=title_tokens)
+            self.build_from_fetched(fetched_delta)
             return
         delta_docs = _indexable_docs(fetched_delta).localCheckpoint()
         delta = build_postings(delta_docs, "doc_id", "text")
@@ -367,7 +302,7 @@ class SearchJob:
         # 404/410 leaves the index and the stored-text table entirely
         gone = _gone_docs(fetched_delta).localCheckpoint()
         src = self.index_path  # resolved BEFORE the flip
-        zone_src = self._zone_read_path()  # legacy-layout aware
+        zone_src = self.zone_path
         meta_src = self.meta_path
         v = self._live_version()
         nxt = 0 if v is None else v + 1
@@ -385,12 +320,13 @@ class SearchJob:
         zone_delta = build_zone_postings(
             delta_docs.join(gone_ids, "doc_id", "left_anti"),
             "doc_id", "text", title_col=title_col,
-            title_tokens=title_tokens,
         )
         delta_doc_set = delta_docs.select(
             F.col("doc_id").alias("doc")
         ).distinct()
-        old_zone = self.spark.read.parquet(zone_src).drop("word_bucket")
+        old_zone = self.spark.read.schema(ZONE_READ).parquet(zone_src).drop(
+            "word_bucket"
+        )
         merged_zone = (
             old_zone.join(F.broadcast(delta_doc_set), "doc", "left_anti")
             .join(F.broadcast(gone), "doc", "left_anti")
@@ -403,24 +339,22 @@ class SearchJob:
         # newest body serves the excerpt), gone docs drop, everything else
         # carries over. At scale both sides partition-prune to the ≤|delta|
         # doc_buckets the delta touches; untouched buckets copy through.
-        old_meta = self.spark.read.parquet(meta_src)
-        for c in _META_COLS:  # metas written before round 5 lack new cols
-            if c not in old_meta.columns:
-                old_meta = old_meta.withColumn(
-                    c, F.lit(None).cast(_META_TYPES[c])
-                )
-        old_meta = old_meta.select(*_META_COLS)
+        old_meta = (
+            self.spark.read.schema(META_READ).parquet(meta_src)
+            .select(*META_COLS)
+        )
         merged_meta = (
             old_meta.join(delta_docs.select("doc_id"), "doc_id", "left_anti")
             .join(gone_ids, "doc_id", "left_anti")
             .unionByName(
                 delta_docs.join(gone_ids, "doc_id", "left_anti").select(
-                    *_META_COLS
+                    *META_COLS
                 )
             )
         )
-        self._write_meta(
-            merged_meta, os.path.join(self.root, f"docs_meta_v{nxt}")
+        write_docs_meta(
+            merged_meta, os.path.join(self.root, f"docs_meta_v{nxt}"),
+            self.n_buckets,
         )
         self._flip_to(nxt)
         self._gc_versions(nxt)
@@ -514,11 +448,7 @@ class SearchJob:
         )
 
     def add_realtime(
-        self,
-        fetched_delta: DataFrame,
-        stopwords: list[str] | None = None,
-        title_tokens: int = 4,
-        defer_merge: bool = False,
+        self, fetched_delta: DataFrame, defer_merge: bool = False
     ) -> int:
         """Index a crawl round's fetched delta as a realtime segment — the
         docs are searchable as soon as this returns, no main-index rewrite.
@@ -541,13 +471,9 @@ class SearchJob:
         directory (absorbed segments sit in the pending-GC list one cycle,
         and id assignment counts them)."""
         with self._rt_lock:
-            return self._add_realtime_locked(
-                fetched_delta, stopwords, title_tokens, defer_merge
-            )
+            return self._add_realtime_locked(fetched_delta, defer_merge)
 
-    def _add_realtime_locked(
-        self, fetched_delta, stopwords, title_tokens, defer_merge
-    ) -> int:
+    def _add_realtime_locked(self, fetched_delta, defer_merge) -> int:
         segs = self._rt_segments()
         self._rt_sweep_orphans()  # crashed half-appends die here
         k = max(segs + self._rt_pending_gc(), default=-1) + 1
@@ -570,26 +496,22 @@ class SearchJob:
         )
         title_col = "title" if "title" in fetched.columns else None
         write_postings_bucketed(
-            build_postings(docs, "doc_id", "text", stopwords),
+            build_postings(docs, "doc_id", "text"),
             os.path.join(seg, "postings"), self.n_buckets,
         )
         write_postings_bucketed(
-            build_zone_postings(
-                docs, "doc_id", "text", title_col=title_col,
-                title_tokens=title_tokens,
-            ),
+            build_zone_postings(docs, "doc_id", "text", title_col=title_col),
             os.path.join(seg, "zone"), self.n_buckets,
         )
-        self._write_meta(docs.select(*_META_COLS),
-                         os.path.join(seg, "docs_meta"))
+        write_docs_meta(docs, os.path.join(seg, "docs_meta"), self.n_buckets)
         gone.write.mode("overwrite").parquet(os.path.join(seg, "gone"))
         self._rt_commit_segments(segs + [k])
         if not defer_merge and self.needs_absorb():
             # periodic merge pass: bound the per-query segment fan-out
-            self.merge_realtime(title_tokens=title_tokens)
+            self.merge_realtime()
         return k
 
-    def merge_realtime(self, title_tokens: int = 4) -> None:
+    def merge_realtime(self) -> None:
         """Absorb every realtime segment into the next MAIN generation (one
         merge_delta over the union of their fetched rows — newest-wins per
         doc falls out of max_by(round)) and clear the segment pointer.
@@ -620,7 +542,7 @@ class SearchJob:
                         df, allowMissingColumns=True
                     )
                 )
-            self.merge_delta(fetched_all, title_tokens=title_tokens)
+            self.merge_delta(fetched_all)
             # clear THEN retain: a crash between the two leaves the dirs
             # orphaned (swept by the next append), never double-served
             self._rt_commit_segments([])
@@ -631,7 +553,7 @@ class SearchJob:
         plus docs it deleted — the anti-join mask for everything older."""
         seg = self._seg_path(k)
         ids = (
-            self.spark.read.schema(_META_READ)
+            self.spark.read.schema(META_READ)
             .parquet(os.path.join(seg, "docs_meta"))
             .select(F.col("doc_id").alias("doc"))
         )
@@ -650,7 +572,7 @@ class SearchJob:
         all older sources (segment deltas are round-sized → broadcast
         anti-joins; each segment scan is bucket-pruned exactly like the
         main one). Deleted docs simply have no rows in their segment."""
-        seg_schema = _POSTINGS_READ if sub == "postings" else _ZONE_READ
+        seg_schema = POSTINGS_READ if sub == "postings" else ZONE_READ
         for k in sorted(self._rt_segments()):
             seg_probe = probe_postings_bucketed(
                 self.spark, os.path.join(self._seg_path(k), sub), terms,
@@ -662,35 +584,33 @@ class SearchJob:
         return base
 
     def _probe_main(self, terms: list[str], sub: str) -> DataFrame:
-        path = (
-            self.index_path if sub == "postings" else self._zone_read_path()
+        path, schema, empty = (
+            (self.index_path, POSTINGS_READ, POSTINGS_SCHEMA)
+            if sub == "postings"
+            else (self.zone_path, ZONE_READ, ZONE_SCHEMA)
         )
         if not os.path.isdir(path):
             # no main build yet (realtime-only serving)
-            schema = _POSTINGS_SCHEMA if sub == "postings" else _ZONE_SCHEMA
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], empty)
         return probe_postings_bucketed(
-            self.spark, path, terms, self.n_buckets
+            self.spark, path, terms, self.n_buckets, schema=schema
         )
 
     def _meta_df(self) -> DataFrame:
         """The stored-doc table as queries see it: live main generation
         overlaid with the realtime segments (newest-wins)."""
         if os.path.isdir(self.meta_path):
-            base = self.spark.read.parquet(self.meta_path)
-            for c in _META_COLS:
-                if c not in base.columns:
-                    base = base.withColumn(
-                        c, F.lit(None).cast(_META_TYPES[c])
-                    )
-            base = base.select(*_META_COLS)
+            base = (
+                self.spark.read.schema(META_READ).parquet(self.meta_path)
+                .select(*META_COLS)
+            )
         else:
-            base = self.spark.createDataFrame([], _META_SCHEMA)
+            base = self.spark.createDataFrame([], META_SCHEMA)
         for k in sorted(self._rt_segments()):
             seg_meta = (
-                self.spark.read.schema(_META_READ)
+                self.spark.read.schema(META_READ)
                 .parquet(os.path.join(self._seg_path(k), "docs_meta"))
-                .select(*_META_COLS)
+                .select(*META_COLS)
             )
             touched = self._rt_touched(k).select(
                 F.col("doc").alias("doc_id")
@@ -800,14 +720,15 @@ class SearchJob:
         scale path for stats: it reads the stored index (word/tf columns,
         parquet-pruned) instead of re-tokenizing the corpus."""
         if os.path.isdir(self.index_path):
-            base = self.spark.read.parquet(self.index_path).drop(
-                "word_bucket"
+            base = (
+                self.spark.read.schema(POSTINGS_READ).parquet(self.index_path)
+                .drop("word_bucket")
             )
         else:
-            base = self.spark.createDataFrame([], _POSTINGS_SCHEMA)
+            base = self.spark.createDataFrame([], POSTINGS_SCHEMA)
         for k in sorted(self._rt_segments()):
             seg = (
-                self.spark.read.schema(_POSTINGS_READ)
+                self.spark.read.schema(POSTINGS_READ)
                 .parquet(os.path.join(self._seg_path(k), "postings"))
                 .drop("word_bucket")
             )
@@ -917,7 +838,6 @@ class SearchJob:
         one_per_site: bool = False,
         before: int = 5,
         width: int = 12,
-        title_tokens: int = 4,
     ) -> DataFrame:
         """Ranked results page WITH per-hit context excerpts (the s.cgi
         results-page output side — round-3 verdict missing #1): ranks off
@@ -930,7 +850,7 @@ class SearchJob:
         stored = self._meta_df().select("doc_id", "text")
         return with_excerpts(
             ranked, stored, terms, doc_col="doc_id",
-            before=before, width=width, title_tokens=title_tokens,
+            before=before, width=width,
         )
 
     def search_excerpts_all(
@@ -938,7 +858,6 @@ class SearchJob:
         terms: list[str],
         before: int = 5,
         width: int = 12,
-        title_tokens: int = 4,
     ) -> DataFrame:
         """EVERY AND-hit with its context excerpt, unpaged (the q53 driver
         family: the full annotated hit set, not a results page). The probe
@@ -949,7 +868,6 @@ class SearchJob:
         return with_excerpts(
             hits, self._meta_df().select("doc_id", "text"), terms,
             doc_col="doc_id", before=before, width=width,
-            title_tokens=title_tokens,
         )
 
     def render_page(
@@ -1033,7 +951,6 @@ class SearchJob:
         doc_ids: list[int],
         before: int = 5,
         width: int = 12,
-        title_tokens: int = 4,
     ) -> DataFrame:
         """Excerpts for an already-rendered page of doc ids — the pruned
         serving path: the ids' doc_buckets are computed driver-side (same
@@ -1056,7 +973,7 @@ class SearchJob:
         buckets = sorted({r["b"] for r in rows})
         if os.path.isdir(self.meta_path):
             stored = (
-                self.spark.read.parquet(self.meta_path)
+                self.spark.read.schema(META_READ).parquet(self.meta_path)
                 .filter(
                     F.col("doc_bucket").isin(buckets)
                     & F.col("doc_id").isin(ids)
@@ -1069,7 +986,7 @@ class SearchJob:
             )
         for k in sorted(self._rt_segments()):
             seg_meta = (
-                self.spark.read.schema(_META_READ)
+                self.spark.read.schema(META_READ)
                 .parquet(os.path.join(self._seg_path(k), "docs_meta"))
                 # same partition pruning as the main meta scan (round-5
                 # ADVICE low): segments are bucketed by the same hash, so
@@ -1089,5 +1006,5 @@ class SearchJob:
         hits = stored.select(F.col("doc_id").alias("doc"))
         return with_excerpts(
             hits, stored, terms, doc_col="doc_id",
-            before=before, width=width, title_tokens=title_tokens,
+            before=before, width=width,
         )

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from .search_job import SearchJob
 
 # bump when the adapter/index layout changes — stale on-disk caches rebuild
-_LAYOUT_VERSION = "v1"
+_LAYOUT_VERSION = "v2"
 _N_BUCKETS = 32
 
 _lock = threading.Lock()

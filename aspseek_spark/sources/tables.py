@@ -21,8 +21,6 @@ Table layouts (all parquet, explicit schemas — FIXTURES.md):
                         existing version dirs byte-identical. The manifest
                         maps fpart → owning round per committed round —
                         exactly Iceberg's partition-overwrite snapshot model.
-                        (Legacy whole-snapshot stores under frontier/round=N
-                        are still readable.)
   bloom/round=N/        snapshot per round (P blob rows; tiny)
   seen_delta/round=N/   append-only — only NEW urls each round, so per-round
                         write cost is O(new), not O(total); the logical
@@ -37,9 +35,6 @@ Table layouts (all parquet, explicit schemas — FIXTURES.md):
   robots_delta/round=N/ append-only robots-cache additions
   fetched/round=N/      append-only crawl output (+ extracted text)
   metrics/round=N/      append-only per-round lineage + metrics [B:14]
-
-Use ``use_iceberg=True`` to route through a real Iceberg catalog when jars
-are present (feature-flag seam; raises cleanly here).
 """
 
 from __future__ import annotations
@@ -117,12 +112,7 @@ def probe_state_schema(config: CrawlConfig) -> T.StructType:
 class StateStore:
     """Directory-backed snapshot store with atomic manifest publish."""
 
-    def __init__(self, root: str, spark: SparkSession, use_iceberg: bool = False):
-        if use_iceberg:
-            raise NotImplementedError(
-                "Iceberg jars not present in this image; parquet+manifest "
-                "emulation active (same commit protocol)."
-            )
+    def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
         os.makedirs(root, exist_ok=True)
@@ -177,8 +167,9 @@ class StateStore:
         return os.path.join(self.root, "frontier_rounds", f"round={round_id}")
 
     def frontier_map(self, round_id: int) -> dict[int, int] | None:
-        """fpart → owning-round map for ``round_id``; None = legacy layout
-        (whole-snapshot store written before partitioning existed)."""
+        """fpart → owning-round map for ``round_id``; None when the
+        manifest retains no map for that round (not committed, or older
+        than the two-round resume window)."""
         if not os.path.exists(self._manifest_path):
             return None
         with open(self._manifest_path) as f:
@@ -451,16 +442,14 @@ class StateStore:
         # a crash anywhere is healed by read_seen_bucketed's marker-driven
         # catch-up)
         # snapshot GC (Iceberg: expire_snapshots): unreferenced frontier
-        # version dirs + all-but-last-2 bloom snapshots (and any legacy
-        # whole-snapshot frontier dirs from pre-partitioning stores)
+        # version dirs + all-but-last-2 bloom snapshots
         self._gc_frontier_versions(kept_maps)
-        for table in ("frontier", "bloom"):
-            for old in range(round_id - 2, -1, -1):
-                path = self._p(table, old)
-                if os.path.exists(path):
-                    shutil.rmtree(path)
-                else:
-                    break
+        for old in range(round_id - 2, -1, -1):
+            path = self._p("bloom", old)
+            if os.path.exists(path):
+                shutil.rmtree(path)
+            else:
+                break
 
     def delete_urls(self, round_id: int, urls: list[str], config) -> None:
         """URL expiry / tag deletion (north_star cuckoo-deletion use case;
@@ -505,36 +494,30 @@ class StateStore:
             p = self._p("seen_delta", r)
             if os.path.exists(p):
                 shutil.rmtree(p)
-        if self.frontier_map(round_id) is None:
-            # legacy whole-snapshot layout
-            new_frontier.write.mode("overwrite").parquet(
-                self._p("frontier", round_id)
+        # deletions are rare (tag expiry): rewrite ALL partitions as a
+        # fresh full version of round_id and republish the map
+        g = self._fpart_granularity(config)
+        out_dir = self._frontier_round_dir(round_id)
+        (
+            new_frontier.withColumn(
+                "fpart",
+                F.floor(F.col("next_fetch_unix") / F.lit(g)).cast("long"),
             )
-        else:
-            # deletions are rare (tag expiry): rewrite ALL partitions as a
-            # fresh full version of round_id and republish the map
-            g = self._fpart_granularity(config)
-            out_dir = self._frontier_round_dir(round_id)
-            (
-                new_frontier.withColumn(
-                    "fpart",
-                    F.floor(F.col("next_fetch_unix") / F.lit(g)).cast("long"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("fpart")
-                .parquet(out_dir)
-            )
-            fmap = {
-                int(d.split("=", 1)[1]): round_id
-                for d in os.listdir(out_dir)
-                if d.startswith("fpart=")
-            }
-            kept = {round_id: fmap}
-            prev = self.frontier_map(round_id - 1)
-            if prev is not None:
-                kept[round_id - 1] = prev
-            self._publish(round_id, config, frontier_maps=kept)
-            self._gc_frontier_versions(kept)
+            .write.mode("overwrite")
+            .partitionBy("fpart")
+            .parquet(out_dir)
+        )
+        fmap = {
+            int(d.split("=", 1)[1]): round_id
+            for d in os.listdir(out_dir)
+            if d.startswith("fpart=")
+        }
+        kept = {round_id: fmap}
+        prev = self.frontier_map(round_id - 1)
+        if prev is not None:
+            kept[round_id - 1] = prev
+        self._publish(round_id, config, frontier_maps=kept)
+        self._gc_frontier_versions(kept)
         new_bloom.write.mode("overwrite").parquet(self._p("bloom", round_id))
         # the bucketed backstop table must forget the deleted urls too
         self._rebuild_seen_bucketed(round_id, config)
@@ -543,9 +526,9 @@ class StateStore:
     def read_frontier(self, round_id: int) -> DataFrame:
         fmap = self.frontier_map(round_id)
         if fmap is None:
-            # legacy whole-snapshot layout (pre-partitioning stores)
-            return self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-                self._p("frontier", round_id)
+            raise FileNotFoundError(
+                f"no committed frontier for round {round_id} in "
+                f"{self.root} (the manifest keeps the last two rounds)"
             )
         if not fmap:
             return self.spark.createDataFrame([], FRONTIER_SCHEMA)

@@ -7,6 +7,7 @@ records. Run: python scripts/check_entry.py [sf_dir]
 from __future__ import annotations
 
 import decimal
+import os
 import hashlib
 import sys
 import time
@@ -57,7 +58,7 @@ def value_hash(rows, colnames):
 
 def main():
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")

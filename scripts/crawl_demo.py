@@ -6,6 +6,7 @@ Prints per-round metrics, fetch-order mismatch count, seen-set equality.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
@@ -26,7 +27,7 @@ def main():
     from aspseek_spark.sources.webgen import WebSpec, write_web
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

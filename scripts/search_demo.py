@@ -31,7 +31,7 @@ N_ROUNDS = 3
 
 def main() -> int:
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .appName("aspseek_search_demo")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")

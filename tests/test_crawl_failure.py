@@ -6,6 +6,7 @@ counts) to CrawlJob's executor. These tests check that every Spark job of
 a round runs in the caller's job group, and that a round which raises
 surfaces the original error with no job of it still running and nothing
 committed — and that re-running the round then matches a clean crawl.
+Building a CrawlJob leaves the session's settings as it found them.
 """
 
 from __future__ import annotations
@@ -75,6 +76,19 @@ def test_round_jobs_stay_in_callers_job_group(
     stray = set(tracker.getJobIdsForGroup(None)) - before
     assert not stray, f"round jobs escaped the caller's group: {stray}"
     assert tracker.getJobIdsForGroup("crawl-round-1")
+
+
+def test_crawl_job_leaves_session_split_size_alone(
+    spark, tiny_web, test_config, tmp_path_factory
+):
+    """Building a CrawlJob must not change session-wide scan settings:
+    other work sharing the session (searchd probes, driver entries) would
+    inherit them."""
+    key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.unset(key)
+    default = spark.conf.get(key)
+    _mk_job(spark, tiny_web, test_config, str(tmp_path_factory.mktemp("conf")))
+    assert spark.conf.get(key) == default
 
 
 def _fail_then_recover(spark, job, seeds, store, failing_round, inject):

@@ -52,12 +52,18 @@ def test_kill_after_commit_resumes_identically(
     assert store_b.last_committed_round() == 1
 
     # fake a partial round-2 left by a crash BEFORE the manifest publish:
-    # data dirs exist, manifest still says round 1 → must stay invisible
+    # round 2's frontier partition and seen-delta dirs exist, the manifest
+    # still says round 1 → the junk must stay invisible and be overwritten
     import os
 
-    os.makedirs(os.path.join(root_b, "frontier", "round=2"), exist_ok=True)
-    with open(os.path.join(root_b, "frontier", "round=2", "junk"), "w") as f:
-        f.write("partial write from a crashed attempt")
+    fpart = min(store_b.frontier_map(1))
+    for d in (
+        os.path.join(root_b, "frontier_rounds", "round=2", f"fpart={fpart}"),
+        os.path.join(root_b, "seen_delta", "round=2"),
+    ):
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "junk"), "w") as f:
+            f.write("partial write from a crashed attempt")
     assert store_b.last_committed_round() == 1
 
     job_b2, seeds_b2, store_b2 = _mk_job(spark, tiny_web, test_config, root_b)
@@ -81,6 +87,13 @@ def test_kill_after_commit_resumes_identically(
         .collect()
     )
     assert fr_a == fr_b
+
+
+def test_read_frontier_outside_retained_window_raises(reference_run):
+    """The manifest keeps the frontier maps of the last two rounds; an
+    older round has no frontier to read and says so."""
+    with pytest.raises(FileNotFoundError, match="no committed frontier"):
+        reference_run.read_frontier(N_ROUNDS - 2)
 
 
 def test_stale_bloom_format_rebuilt_on_resume(

@@ -486,43 +486,3 @@ def test_merge_swap_is_atomic(spark, fetched_fixture, tmp_path_factory):
     assert not os.path.isdir(v0_dir)
     assert os.path.isdir(os.path.join(job.root, "postings_v1"))
     shutil.rmtree(job.root, ignore_errors=True)
-
-
-def test_legacy_unversioned_zone_layout_upgrades(
-    spark, fetched_fixture, tmp_path_factory
-):
-    """Round-5 ADVICE low: an index built before zone versioning has the
-    version pointer set but its zone table at the legacy unversioned
-    ``zone_postings``. Reads must fall back (no silent empty zone index),
-    and a merge_delta must upgrade the layout instead of crashing."""
-    import os
-    import shutil
-
-    root = str(tmp_path_factory.mktemp("legacy_zone"))
-    job = SearchJob(spark, root, n_buckets=16)
-    job.build_from_fetched(fetched_fixture)
-    want = {(r["doc"], r["score"])
-            for r in job.search_zone_ranked(["merge"]).collect()}
-    assert want, "fixture must produce zone hits"
-    # simulate the pre-versioning layout: zone lives at the legacy path
-    v = job._live_version()
-    shutil.move(
-        os.path.join(root, f"zone_postings_v{v}"),
-        os.path.join(root, "zone_postings"),
-    )
-    got = {(r["doc"], r["score"])
-           for r in job.search_zone_ranked(["merge"]).collect()}
-    assert got == want, "legacy fallback must serve the zone index"
-    # merge upgrades the layout: zone lands versioned, results follow
-    delta = spark.createDataFrame(
-        [(9, "http://hz.test/new", 7000, "hz.test", 1, 200,
-          "merge merge merge zonefresh")],
-        "round int, url_canon string, url_hash64 long, host string, "
-        "depth int, status int, text string",
-    )
-    job.merge_delta(delta)
-    assert os.path.isdir(
-        os.path.join(root, f"zone_postings_v{job._live_version()}")
-    )
-    post = _docs(job.search_zone_ranked(["merge"]))
-    assert 7000 in post, "merged doc must join the zone ranking"
