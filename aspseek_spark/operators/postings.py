@@ -52,6 +52,27 @@ ZONE_READ = ZONE_SCHEMA + ", word_bucket long"
 META_READ = META_SCHEMA + ", doc_bucket long"
 
 
+def _doc_tokens(
+    docs: DataFrame, doc_col: str, text_col: str,
+    stopwords: list[str] | None = None,
+) -> DataFrame:
+    """(doc, pos, word) — one row per lowercased token."""
+    toks = docs.select(
+        F.col(doc_col).alias("doc"),
+        F.posexplode(tokens_col(text_col)).alias("pos", "word"),
+    ).withColumn("word", F.lower("word"))
+    if stopwords:
+        toks = toks.filter(~F.col("word").isin(stopwords))  # F8
+    return toks
+
+
+def _postings_agg(toks: DataFrame, keys: list[str]) -> DataFrame:
+    return toks.groupBy(*keys).agg(
+        F.sort_array(F.collect_list("pos")).alias("positions"),
+        F.count("*").alias("tf"),
+    )
+
+
 def build_postings(
     docs: DataFrame,
     doc_col: str = "doc_id",
@@ -59,15 +80,8 @@ def build_postings(
     stopwords: list[str] | None = None,
 ) -> DataFrame:
     """(doc, word, positions array<int>, tf) from raw text (A3)."""
-    toks = docs.select(
-        F.col(doc_col).alias("doc"),
-        F.posexplode(tokens_col(text_col)).alias("pos", "word"),
-    ).withColumn("word", F.lower("word"))
-    if stopwords:
-        toks = toks.filter(~F.col("word").isin(stopwords))  # F8
-    return toks.groupBy("doc", "word").agg(
-        F.sort_array(F.collect_list("pos")).alias("positions"),
-        F.count("*").alias("tf"),
+    return _postings_agg(
+        _doc_tokens(docs, doc_col, text_col, stopwords), ["doc", "word"]
     )
 
 
@@ -77,12 +91,12 @@ def word_doc_freq(
     """df(word) dictionary stats (A4); approx_count_distinct at scale.
 
     ``unique_doc_word=True`` declares the input holds AT MOST ONE row per
-    (doc, word) — true for every stored-index relation (build_postings /
-    merge paths groupBy (doc, word); the realtime overlay is newest-wins, so
-    a doc's rows come from exactly one source). Under that invariant
-    countDistinct(doc) == count(*), and the plan drops the count-distinct
-    expand (2 Exchange → 1) — r07 guide §2.4 (one exchange instead of two
-    for the same answer)."""
+    (doc, word) — true for every stored-index relation (build_postings
+    groups by (doc, word); SearchJob's merges and realtime overlay are
+    newest-wins, so a doc's rows come from exactly one source). Under that
+    invariant countDistinct(doc) == count(*), and the plan drops the
+    count-distinct expand (2 Exchange → 1) — r07 guide §2.4 (one exchange
+    instead of two for the same answer)."""
     agg = (
         F.approx_count_distinct("doc")
         if approx
@@ -96,11 +110,13 @@ def docs_with_all(postings: DataFrame, terms: list[str]) -> DataFrame:
     semi-join — one shuffle regardless of term count).
 
     PRECONDITION (r07): ``postings`` holds at most one row per (doc, word)
-    — the postings-relation invariant every in-repo producer maintains
-    (build_postings groups by (doc, word); compact/merge re-group; the
-    realtime overlay anti-joins touched docs so each doc's rows come from
-    one source). count(word) therefore equals countDistinct(word) and the
-    plan needs ONE exchange instead of the count-distinct two (guide §2.4);
+    — the postings-relation invariant every in-repo producer maintains:
+    build_postings groups by (doc, word), and SearchJob's mask-and-union
+    writer (the realtime overlay, the absorb and merge_delta) anti-joins
+    every doc a newer layer touched out of all older layers, so each doc's
+    rows come from exactly one source (tests/test_realtime.py pins it).
+    count(word) therefore equals countDistinct(word) and the plan needs
+    ONE exchange instead of the count-distinct two (guide §2.4);
     tests/test_operators.py pins the equivalence."""
     lowered = sorted(set(t.lower() for t in terms))
     hits = postings.filter(F.col("word").isin(lowered))
@@ -503,6 +519,42 @@ def docs_with_any_form(
     return docs_with_any(postings, expand_terms(terms, form_map))
 
 
+def _zone_tokens(
+    docs: DataFrame, doc_col: str, text_col: str, title_col: str | None,
+    title_tokens: int,
+) -> DataFrame:
+    """(doc, word, zone) — one row per lowercased body token (zone 2) and
+    per title token (zone 1)."""
+    toks = tokens_col(text_col)
+    title_toks = (
+        tokens_col(title_col) if title_col is not None
+        else F.slice(toks, 1, title_tokens)
+    )
+    body = docs.select(
+        F.col(doc_col).alias("doc"),
+        F.explode(toks).alias("word"),
+        F.lit(2).alias("zone"),
+    )
+    title = docs.select(
+        F.col(doc_col).alias("doc"),
+        F.explode(title_toks).alias("word"),
+        F.lit(1).alias("zone"),
+    )
+    return body.unionByName(title).withColumn("word", F.lower("word"))
+
+
+def _zone_agg(toks: DataFrame, keys: list[str]) -> DataFrame:
+    agg = toks.groupBy(*keys).agg(
+        F.sum(F.when(F.col("zone") == 1, 1).otherwise(0)).alias("tf_title"),
+        F.sum(F.when(F.col("zone") == 2, 1).otherwise(0)).alias("tf_body"),
+    )
+    return agg.withColumn(
+        "zone_mask",
+        F.when(F.col("tf_title") > 0, 1).otherwise(0)
+        + F.when(F.col("tf_body") > 0, 2).otherwise(0),
+    )
+
+
 def build_zone_postings(
     docs: DataFrame,
     doc_col: str = "doc_id",
@@ -519,30 +571,9 @@ def build_zone_postings(
     the crawl's fetched table passes title_col from the parser's
     extract_title output. One shuffle (the groupBy); all tokenizing codegen.
     """
-    toks = tokens_col(text_col)
-    title_toks = (
-        tokens_col(title_col) if title_col is not None
-        else F.slice(toks, 1, title_tokens)
-    )
-    body = docs.select(
-        F.col(doc_col).alias("doc"),
-        F.explode(toks).alias("word"),
-        F.lit(2).alias("zone"),
-    )
-    title = docs.select(
-        F.col(doc_col).alias("doc"),
-        F.explode(title_toks).alias("word"),
-        F.lit(1).alias("zone"),
-    )
-    merged = body.unionByName(title).withColumn("word", F.lower("word"))
-    agg = merged.groupBy("doc", "word").agg(
-        F.sum(F.when(F.col("zone") == 1, 1).otherwise(0)).alias("tf_title"),
-        F.sum(F.when(F.col("zone") == 2, 1).otherwise(0)).alias("tf_body"),
-    )
-    return agg.withColumn(
-        "zone_mask",
-        F.when(F.col("tf_title") > 0, 1).otherwise(0)
-        + F.when(F.col("tf_body") > 0, 2).otherwise(0),
+    return _zone_agg(
+        _zone_tokens(docs, doc_col, text_col, title_col, title_tokens),
+        ["doc", "word"],
     )
 
 
@@ -567,6 +598,18 @@ def rank_zone_weighted(
     return scored.orderBy(F.desc("score"), F.asc("doc")).limit(k)
 
 
+def _word_bucketed(rows: DataFrame, n_buckets: int) -> DataFrame:
+    """Add word_bucket = pmod(xxhash64(word), n_buckets) and hash-partition
+    on it: the one exchange a bucketed write needs."""
+    return rows.withColumn(
+        "word_bucket", F.pmod(F.xxhash64("word"), F.lit(n_buckets))
+    ).repartition("word_bucket")
+
+
+def _write_word_buckets(rows: DataFrame, path: str) -> None:
+    rows.write.mode("overwrite").partitionBy("word_bucket").parquet(path)
+
+
 def write_postings_bucketed(
     postings: DataFrame, path: str, n_buckets: int = 64
 ) -> None:
@@ -574,14 +617,38 @@ def write_postings_bucketed(
     a term probe prunes to one directory (the delta-file analog of
     [R:src/deltas.cpp]'s per-word posting files). At real scale this is a
     bucketed Iceberg table; here: partitioned parquet."""
-    (
-        postings.withColumn(
-            "word_bucket", F.pmod(F.xxhash64("word"), F.lit(n_buckets))
-        )
-        .repartition("word_bucket")
-        .write.mode("overwrite")
-        .partitionBy("word_bucket")
-        .parquet(path)
+    _write_word_buckets(_word_bucketed(postings, n_buckets), path)
+
+
+def write_index_bucketed(
+    docs: DataFrame,
+    postings_path: str,
+    zone_path: str,
+    n_buckets: int = 64,
+    title_col: str | None = None,
+) -> None:
+    """Index (doc_id, text[, title]) docs: the rows of build_postings and
+    build_zone_postings, written as write_postings_bucketed writes them,
+    with ONE shuffle per table instead of two. The tokens are partitioned
+    on word_bucket before they are grouped, so the (word_bucket, doc, word)
+    grouping and the partitioned write both reuse that exchange."""
+    keys = ["word_bucket", "doc", "word"]
+    _write_word_buckets(
+        _postings_agg(
+            _word_bucketed(_doc_tokens(docs, "doc_id", "text"), n_buckets),
+            keys,
+        ),
+        postings_path,
+    )
+    _write_word_buckets(
+        _zone_agg(
+            _word_bucketed(
+                _zone_tokens(docs, "doc_id", "text", title_col, TITLE_TOKENS),
+                n_buckets,
+            ),
+            keys,
+        ),
+        zone_path,
     )
 
 
@@ -628,42 +695,6 @@ def probe_postings_bucketed(
         F.col("word_bucket").isin(buckets) & F.col("word").isin(lowered)
     )
     return probe.drop("word_bucket")
-
-
-def compact_postings(
-    spark,
-    main_path: str,
-    delta: DataFrame,
-    out_path: str,
-    n_buckets: int = 64,
-    drop_docs: DataFrame | None = None,
-) -> None:
-    """SNK2 LSM-style merge: a re-crawled doc's postings REPLACE its old
-    ones (the delta's doc set is anti-joined out of the main index before
-    the union — a plain union would keep stale words searchable on a
-    revisited doc), and ``drop_docs`` (one `doc` column — e.g. URLs that
-    answered 404/410 on revisit) leave the index entirely, the reference's
-    delete pass. Both doc sets are delta-sized → broadcast anti-joins
-    against the bucketed main scan. Duplicate delta rows still merge
-    (positions concatenated, tf summed)."""
-    main = spark.read.schema(POSTINGS_READ).parquet(main_path).drop(
-        "word_bucket"
-    )
-    delta_docs = delta.select("doc").distinct()
-    main = main.join(F.broadcast(delta_docs), "doc", "left_anti")
-    if drop_docs is not None:
-        drop = drop_docs.select("doc").distinct()
-        main = main.join(F.broadcast(drop), "doc", "left_anti")
-        delta = delta.join(F.broadcast(drop), "doc", "left_anti")
-    merged = (
-        main.unionByName(delta)
-        .groupBy("doc", "word")
-        .agg(
-            F.sort_array(F.flatten(F.collect_list("positions"))).alias("positions"),
-            F.sum("tf").alias("tf"),
-        )
-    )
-    write_postings_bucketed(merged, out_path, n_buckets)
 
 
 def with_excerpts(

@@ -10,22 +10,28 @@ driver contract reads plain parquet tables — right answers, wrong plan at
   build_from_fetched  — ONE tokenize pass over the crawl's ``fetched``
                         output (latest non-304 text per URL) → postings +
                         zone postings written BUCKETED by word hash
-                        (write_postings_bucketed), plus a slim docs_meta
+                        (write_index_bucketed), plus a slim docs_meta
                         side table for site grouping (J9).
   add_realtime        — the reference's REALTIME tier ([R:src/words.cpp]
                         realtime urlwordNN tables): a just-crawled round
                         becomes searchable immediately as a small overlay
                         segment, WITHOUT rewriting the main index; queries
                         consult main ∪ segments with newest-wins semantics
-                        on doc collisions.
+                        on doc collisions. A segment stores only its
+                        index tables (postings, zone, docs_meta, gone) —
+                        no raw fetched rows.
   merge_delta         — LSM-style refresh: a new crawl round's fetched
-                        delta is merged into the main index
-                        (compact_postings) and atomically swapped in —
-                        the reference's periodic `index` merge pass.
-  merge_realtime      — absorbs ALL realtime segments into the main index
-                        (one merge_delta over their fetched rows) and
-                        clears them; query results are identical before
-                        and after (tests/test_realtime.py).
+                        delta is tokenized once and laid over the main
+                        index by the same mask-and-union writer, then
+                        atomically swapped in — the reference's periodic
+                        `index` merge pass.
+  merge_realtime      — absorbs ALL realtime segments into the main index:
+                        it writes the overlay queries already read (main
+                        masked by each newer segment's docs, plus that
+                        segment's rows) as the next generation and clears
+                        the segments. Nothing is re-tokenized, so query
+                        results are identical before and after by
+                        construction (tests/test_realtime.py).
   search_*            — every query family the inline entries implement
                         (AND / OR / NOT / phrase / proximity / morphology
                         / zone-weighted ranking / site- and clone-grouped
@@ -51,12 +57,13 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+from collections import namedtuple
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.postings import (
-    META_COLS,
     META_READ,
     META_SCHEMA,
     POSTINGS_READ,
@@ -65,7 +72,6 @@ from ..operators.postings import (
     ZONE_SCHEMA,
     build_postings,
     build_zone_postings,
-    compact_postings,
     docs_with_all,
     docs_with_any,
     docs_without,
@@ -78,63 +84,90 @@ from ..operators.postings import (
     rank_zone_weighted,
     with_excerpts,
     write_docs_meta,
+    write_index_bucketed,
     write_postings_bucketed,
 )
 
+# one stored table: main-generation directory base (``{main}_v{N}``),
+# segment sub-directory, read schema (with the partition column), row
+# schema, doc-id column
+_Table = namedtuple("_Table", "main seg read rows key")
+_TABLES = {
+    "postings": _Table(
+        "postings", "postings", POSTINGS_READ, POSTINGS_SCHEMA, "doc"
+    ),
+    "zone": _Table("zone_postings", "zone", ZONE_READ, ZONE_SCHEMA, "doc"),
+    "meta": _Table("docs_meta", "docs_meta", META_READ, META_SCHEMA, "doc_id"),
+}
 
-def _indexable_docs(fetched: DataFrame) -> DataFrame:
-    """fetched rows → one (doc_id, host, text, title, content_md5,
-    fetched_unix) per URL: 200-status rows with text, keeping the LATEST
-    round's body (revisits re-index; 304s carry no text and never reach
-    this point). max_by is deterministic — round is unique per URL (one
-    fetch per URL per round). fetched_unix (the `after:` date-limit source)
+
+def _latest_per_url(fetched: DataFrame) -> DataFrame:
+    """fetched rows → ONE aggregation per URL: ``gone`` (its LATEST row
+    answers 404/410 — the reference's delete pass input) and ``d``, the
+    stored-doc columns of its latest 200-with-text row (null when it has
+    none: 304s carry no text). Revisits re-index from the newest body.
+    max_by is deterministic — round is unique per URL (one fetch per URL
+    per round) — and skips null orderings, so ``d`` only ever sees
+    200-with-text rows. fetched_unix (the `after:` date-limit source)
     comes from sched_unix; slim test fixtures without it fall back to the
     round number — a monotone stamp with the same filtering semantics.
     title (the W4 title zone, from the parser's extract_title) and
     content_md5 (the S5 clone key, for clone-collapsed results) are carried
     when the fetched table has them, null otherwise."""
-    stamp = (
-        F.col("sched_unix") if "sched_unix" in fetched.columns
-        else F.col("round").cast("long")
+    def col_or(name: str, default):
+        return F.col(name) if name in fetched.columns else default
+
+    null = F.lit(None).cast("string")
+    ok = (F.col("status") == 200) & F.col("text").isNotNull()
+    doc = F.struct(
+        F.col("url_canon").alias("url"), "host", "text",
+        col_or("title", null).alias("title"),
+        col_or("content_md5", null).alias("content_md5"),
+        col_or("sched_unix", F.col("round").cast("long"))
+        .alias("fetched_unix"),
     )
-    title = (
-        F.col("title") if "title" in fetched.columns
-        else F.lit(None).cast("string")
-    )
-    md5 = (
-        F.col("content_md5") if "content_md5" in fetched.columns
-        else F.lit(None).cast("string")
-    )
-    return (
-        fetched.filter((F.col("status") == 200) & F.col("text").isNotNull())
-        .withColumn("_stamp", stamp)
-        .withColumn("_title", title)
-        .withColumn("_md5", md5)
-        .groupBy("url_hash64")
-        .agg(
-            F.max_by("text", "round").alias("text"),
-            F.max_by("host", "round").alias("host"),
-            F.max_by("url_canon", "round").alias("url"),
-            F.max_by("_stamp", "round").alias("fetched_unix"),
-            F.max_by("_title", "round").alias("title"),
-            F.max_by("_md5", "round").alias("content_md5"),
-        )
-        .select(
-            F.col("url_hash64").alias("doc_id"), "url", "host", "text",
-            "title", "content_md5", "fetched_unix",
-        )
+    return fetched.groupBy("url_hash64").agg(
+        F.coalesce(
+            F.max_by(F.col("status").isin(404, 410), "round"), F.lit(False)
+        ).alias("gone"),
+        F.max_by(doc, F.when(ok, F.col("round"))).alias("d"),
     )
 
 
-def _gone_docs(fetched: DataFrame) -> DataFrame:
-    """URLs whose LATEST row answers 404/410 — the reference's delete pass
-    input, shared by merge_delta and the realtime segments."""
-    return (
-        fetched.groupBy("url_hash64")
-        .agg(F.max_by("status", "round").alias("last_status"))
-        .filter(F.col("last_status").isin(404, 410))
-        .select(F.col("url_hash64").alias("doc"))
-    )
+@contextmanager
+def _docs_and_gone(fetched: DataFrame):
+    """Yield (docs to index — META_COLS rows, gone doc ids — one ``doc``
+    column) of ``fetched``, both read from one _latest_per_url aggregation
+    that is computed once (persisted by the first write that reads it)
+    and released on exit. The two are disjoint: a doc whose latest row is
+    404/410 is not indexed from an older 200 body."""
+    per_url = _latest_per_url(fetched).persist()
+    try:
+        docs = per_url.filter(
+            ~F.col("gone") & F.col("d").isNotNull()
+        ).select(F.col("url_hash64").alias("doc_id"), "d.*")
+        gone = per_url.filter("gone").select(
+            F.col("url_hash64").alias("doc")
+        )
+        yield docs, gone
+    finally:
+        per_url.unpersist()
+
+
+def _newest_wins(
+    base: DataFrame, layers: list[tuple[DataFrame, DataFrame]],
+    key: str = "doc",
+) -> DataFrame:
+    """``base`` overlaid with ``layers`` — (touched doc ids, rows) pairs,
+    oldest first: a doc any newer layer touched is masked out of
+    everything older (layers are round-sized → broadcast anti-joins), so
+    each doc's rows come from exactly one source."""
+    for touched, rows in layers:
+        base = base.join(
+            F.broadcast(touched.withColumnRenamed("doc", key)), key,
+            "left_anti",
+        ).unionByName(rows)
+    return base
 
 
 class SearchJob:
@@ -238,10 +271,65 @@ class SearchJob:
     def _gc_versions(self, newest: int) -> None:
         """Drop generations older than newest-1 (keep live + previous)."""
         for k in range(0, max(0, newest - 1)):
-            for base in ("postings_v", "zone_postings_v", "docs_meta_v"):
+            for tab in _TABLES.values():
                 shutil.rmtree(
-                    os.path.join(self.root, f"{base}{k}"), ignore_errors=True
+                    os.path.join(self.root, f"{tab.main}_v{k}"),
+                    ignore_errors=True,
                 )
+
+    def _next_dirs(self) -> tuple[int, dict[str, str]]:
+        """The next generation's number and its table directories (a
+        crashed prior attempt's files are overwritten by the writes)."""
+        v = self._live_version()
+        nxt = 0 if v is None else v + 1
+        return nxt, {
+            t: os.path.join(self.root, f"{tab.main}_v{nxt}")
+            for t, tab in _TABLES.items()
+        }
+
+    def _publish(self, version: int) -> None:
+        self._flip_to(version)
+        self._gc_versions(version)
+
+    def _write_docs(
+        self, docs: DataFrame, dirs: dict[str, str], title_col: str | None
+    ) -> None:
+        """Tokenize ``docs`` once into the three stored tables."""
+        write_index_bucketed(
+            docs, dirs["postings"], dirs["zone"], self.n_buckets,
+            title_col=title_col,
+        )
+        write_docs_meta(docs, dirs["meta"], self.n_buckets)
+
+    def _read(self, path: str, table: str) -> DataFrame:
+        """Rows of one stored table directory: declared schema, partition
+        column dropped."""
+        return (
+            self.spark.read.schema(_TABLES[table].read).parquet(path)
+            .drop("word_bucket", "doc_bucket")
+        )
+
+    def _main(self, table: str) -> DataFrame:
+        """The live main generation's rows of ``table`` (empty before the
+        first build — realtime-only serving)."""
+        path = self._vpath(_TABLES[table].main)
+        if not os.path.isdir(path):
+            return self.spark.createDataFrame([], _TABLES[table].rows)
+        return self._read(path, table)
+
+    def _write_generation(self, rows: dict[str, DataFrame]) -> None:
+        """Write ``rows[table]`` as the next main generation of each table
+        and publish all three with one pointer flip. Callers pass the live
+        tables overlaid by _newest_wins (the mask-and-union writer): each
+        doc's rows come from one source, so no (doc, word) regroup is
+        needed."""
+        nxt, dirs = self._next_dirs()
+        for t, df in rows.items():
+            if t == "meta":
+                write_docs_meta(df, dirs[t], self.n_buckets)
+            else:
+                write_postings_bucketed(df, dirs[t], self.n_buckets)
+        self._publish(nxt)
 
     # -- build / refresh -----------------------------------------------------
     def build_from_fetched(self, fetched: DataFrame) -> None:
@@ -254,121 +342,53 @@ class SearchJob:
 
         The delete pass applies HERE too (round-5 ADVICE high): a URL
         fetched 200 in an early round and 404/410 in a later one must not
-        be indexed from its stale 200 body — _indexable_docs alone keeps
-        the latest 200 row. Matters concretely when merge_realtime absorbs
-        multi-round segments with no main index present (realtime-only
-        serving falls back to this builder): pre-absorb the overlay hides
-        the doc, and the absorb must not resurrect it."""
-        gone = _gone_docs(fetched)
-        docs = _indexable_docs(fetched).join(
-            gone.select(F.col("doc").alias("doc_id")), "doc_id", "left_anti"
-        )
+        be indexed from its stale 200 body."""
+        nxt, dirs = self._next_dirs()
         title_col = "title" if "title" in fetched.columns else None
-        postings = build_postings(docs, "doc_id", "text")
-        v = self._live_version()
-        nxt = 0 if v is None else v + 1
-        new_dir = os.path.join(self.root, f"postings_v{nxt}")
-        shutil.rmtree(new_dir, ignore_errors=True)  # crashed prior attempt
-        write_postings_bucketed(postings, new_dir, self.n_buckets)
-        zp = build_zone_postings(docs, "doc_id", "text", title_col=title_col)
-        zone_dir = os.path.join(self.root, f"zone_postings_v{nxt}")
-        shutil.rmtree(zone_dir, ignore_errors=True)
-        write_postings_bucketed(zp, zone_dir, self.n_buckets)
-        write_docs_meta(
-            docs, os.path.join(self.root, f"docs_meta_v{nxt}"), self.n_buckets
-        )
-        self._flip_to(nxt)
-        self._gc_versions(nxt)
+        with _docs_and_gone(fetched) as (docs, _):
+            self._write_docs(docs, dirs, title_col)
+        self._publish(nxt)
 
     def merge_delta(self, fetched_delta: DataFrame) -> None:
-        """LSM merge (SNK2): tokenize only the delta, merge into the next
-        index GENERATION — main postings, ZONE postings and the stored-text
-        table all move together — then atomically flip the pointer file
-        (the reference's periodic `index` merge). Work is O(delta + touched
-        buckets), not O(corpus). There is no window with no live index: a
-        crash before the flip leaves the old pointer + old directories; the
-        replaced generation survives one merge for in-flight readers
-        (round-3 ADVICE fix — the old rename/rename swap had both a no-dir
-        window and a reader-error window)."""
-        if self._live_version() is None:
-            # nothing to merge into (all data arrived via the realtime
-            # tier): the merge IS the initial build
-            self.build_from_fetched(fetched_delta)
-            return
-        delta_docs = _indexable_docs(fetched_delta).localCheckpoint()
-        delta = build_postings(delta_docs, "doc_id", "text")
+        """LSM merge (SNK2): tokenize only the delta, then lay it over the
+        next index GENERATION with the mask-and-union writer — main
+        postings, ZONE postings and the stored-text table all move
+        together: a revisited doc's rows are replaced by its new body, a
+        URL whose LATEST delta row answers 404/410 leaves all three (the
+        reference's delete pass), untouched docs carry over — then
+        atomically flip the pointer file (the reference's periodic `index`
+        merge). There is no window with no live index: a crash before the
+        flip leaves the old pointer + old directories; the replaced
+        generation survives one merge for in-flight readers."""
         title_col = "title" if "title" in fetched_delta.columns else None
-        # the reference's delete pass: a URL whose LATEST delta row answers
-        # 404/410 leaves the index and the stored-text table entirely
-        gone = _gone_docs(fetched_delta).localCheckpoint()
-        src = self.index_path  # resolved BEFORE the flip
-        zone_src = self.zone_path
-        meta_src = self.meta_path
-        v = self._live_version()
-        nxt = 0 if v is None else v + 1
-        dst = os.path.join(self.root, f"postings_v{nxt}")
-        shutil.rmtree(dst, ignore_errors=True)  # crashed prior attempt
-        compact_postings(
-            self.spark, src, delta, dst, self.n_buckets, drop_docs=gone
-        )
-        # zone compact (round-4 verdict fix #1): identical replace+drop
-        # semantics — a revisited doc's zone rows are rebuilt from its NEW
-        # body/title, a gone doc's rows drop, untouched docs carry over.
-        # No re-aggregation is needed: build_zone_postings over the delta
-        # docs emits each touched doc's COMPLETE zone rows.
-        gone_ids = gone.select(F.col("doc").alias("doc_id"))
-        zone_delta = build_zone_postings(
-            delta_docs.join(gone_ids, "doc_id", "left_anti"),
-            "doc_id", "text", title_col=title_col,
-        )
-        delta_doc_set = delta_docs.select(
-            F.col("doc_id").alias("doc")
-        ).distinct()
-        old_zone = self.spark.read.schema(ZONE_READ).parquet(zone_src).drop(
-            "word_bucket"
-        )
-        merged_zone = (
-            old_zone.join(F.broadcast(delta_doc_set), "doc", "left_anti")
-            .join(F.broadcast(gone), "doc", "left_anti")
-            .unionByName(zone_delta)
-        )
-        zone_dst = os.path.join(self.root, f"zone_postings_v{nxt}")
-        shutil.rmtree(zone_dst, ignore_errors=True)
-        write_postings_bucketed(merged_zone, zone_dst, self.n_buckets)
-        # stored-text refresh: delta docs replace their old rows (revisit →
-        # newest body serves the excerpt), gone docs drop, everything else
-        # carries over. At scale both sides partition-prune to the ≤|delta|
-        # doc_buckets the delta touches; untouched buckets copy through.
-        old_meta = (
-            self.spark.read.schema(META_READ).parquet(meta_src)
-            .select(*META_COLS)
-        )
-        merged_meta = (
-            old_meta.join(delta_docs.select("doc_id"), "doc_id", "left_anti")
-            .join(gone_ids, "doc_id", "left_anti")
-            .unionByName(
-                delta_docs.join(gone_ids, "doc_id", "left_anti").select(
-                    *META_COLS
+        with _docs_and_gone(fetched_delta) as (docs, gone):
+            touched = docs.select(
+                F.col("doc_id").alias("doc")
+            ).unionByName(gone)
+            delta = {
+                "postings": build_postings(docs, "doc_id", "text"),
+                "zone": build_zone_postings(
+                    docs, "doc_id", "text", title_col=title_col
+                ),
+                "meta": docs,
+            }
+            self._write_generation({
+                t: _newest_wins(
+                    self._main(t), [(touched, rows)], _TABLES[t].key
                 )
-            )
-        )
-        write_docs_meta(
-            merged_meta, os.path.join(self.root, f"docs_meta_v{nxt}"),
-            self.n_buckets,
-        )
-        self._flip_to(nxt)
-        self._gc_versions(nxt)
+                for t, rows in delta.items()
+            })
 
     # -- realtime tier ([R:src/words.cpp] realtime tables; round-4 verdict
     # -- "What's missing" #1) --------------------------------------------------
     # A realtime SEGMENT is one crawl round's delta, indexed immediately
-    # into its own small bucketed directories (postings/zone/docs_meta/gone
-    # + the raw fetched rows for the later absorb). Segments are invisible
-    # until their id is committed to the ``realtime.segments`` pointer
-    # (atomic os.replace), so a crash mid-append leaves an orphan directory
-    # the retry clobbers — never a half-readable segment. Queries overlay
-    # segments over the main index newest-wins; merge_realtime() absorbs
-    # them into the next main generation and clears the pointer.
+    # into its own small bucketed directories (postings/zone/docs_meta/gone;
+    # no raw fetched rows — the absorb reads these tables). Segments are
+    # invisible until their id is committed to the ``realtime.segments``
+    # pointer (atomic os.replace), so a crash mid-append leaves an orphan
+    # directory the retry clobbers — never a half-readable segment. Queries
+    # overlay segments over the main index newest-wins; merge_realtime()
+    # absorbs them into the next main generation and clears the pointer.
     @property
     def rt_dir(self) -> str:
         return os.path.join(self.root, "realtime")
@@ -452,14 +472,15 @@ class SearchJob:
     ) -> int:
         """Index a crawl round's fetched delta as a realtime segment — the
         docs are searchable as soon as this returns, no main-index rewrite.
-        O(delta) work: tokenize the delta once, write small bucketed
-        directories. Returns the segment id. Rounds must be monotone across
-        appends (they are in the crawl loop) so newest-wins is well-defined
-        when the segments are absorbed.
+        O(delta) work: one per-URL aggregation of the delta, tokenized once
+        into small bucketed directories. Returns the segment id. Rounds must
+        be monotone across appends (they are in the crawl loop) so
+        newest-wins is well-defined when the segments are absorbed.
 
-        The segment keeps a copy of the raw fetched rows (the absorb
-        re-reads them): round-sized, bounded by rt_max_segments × round,
-        and deleted at absorb — not a second copy of the corpus.
+        The segment stores only its index tables — postings, zone,
+        docs_meta and the gone ids — and no copy of the raw fetched rows:
+        the absorb writes those tables into the main generation as they
+        are.
 
         ``defer_merge=True`` skips the inline auto-absorb even when the
         segment count exceeds rt_max_segments — the caller checks
@@ -478,33 +499,15 @@ class SearchJob:
         self._rt_sweep_orphans()  # crashed half-appends die here
         k = max(segs + self._rt_pending_gc(), default=-1) + 1
         seg = self._seg_path(k)
-        fetched_delta.write.mode("overwrite").parquet(
-            os.path.join(seg, "fetched")
-        )
-        # re-read: the absorb later consumes these exact bytes, and the
-        # index build below shares the scan instead of the caller's lineage
-        fetched = self.spark.read.parquet(os.path.join(seg, "fetched"))
-        gone = _gone_docs(fetched).localCheckpoint()
-        # a doc whose LATEST row in this delta is 404/410 must not enter
+        # a doc whose LATEST row in this delta is 404/410 does not enter
         # the segment's own index either (one crawl round can't produce
         # both, but a caller batching several rounds into one append can)
-        docs = (
-            _indexable_docs(fetched)
-            .join(gone.select(F.col("doc").alias("doc_id")),
-                  "doc_id", "left_anti")
-            .localCheckpoint()
-        )
-        title_col = "title" if "title" in fetched.columns else None
-        write_postings_bucketed(
-            build_postings(docs, "doc_id", "text"),
-            os.path.join(seg, "postings"), self.n_buckets,
-        )
-        write_postings_bucketed(
-            build_zone_postings(docs, "doc_id", "text", title_col=title_col),
-            os.path.join(seg, "zone"), self.n_buckets,
-        )
-        write_docs_meta(docs, os.path.join(seg, "docs_meta"), self.n_buckets)
-        gone.write.mode("overwrite").parquet(os.path.join(seg, "gone"))
+        title_col = "title" if "title" in fetched_delta.columns else None
+        with _docs_and_gone(fetched_delta) as (docs, gone):
+            self._write_docs(docs, {
+                t: os.path.join(seg, tab.seg) for t, tab in _TABLES.items()
+            }, title_col)
+            gone.write.mode("overwrite").parquet(os.path.join(seg, "gone"))
         self._rt_commit_segments(segs + [k])
         if not defer_merge and self.needs_absorb():
             # periodic merge pass: bound the per-query segment fan-out
@@ -512,10 +515,12 @@ class SearchJob:
         return k
 
     def merge_realtime(self) -> None:
-        """Absorb every realtime segment into the next MAIN generation (one
-        merge_delta over the union of their fetched rows — newest-wins per
-        doc falls out of max_by(round)) and clear the segment pointer.
-        Query results are identical before and after the absorb
+        """Absorb every realtime segment into the next MAIN generation and
+        clear the segment pointer. The absorb tokenizes nothing: each table
+        of the next generation is the overlay queries already read — the
+        main table masked by every newer segment's touched docs, plus that
+        segment's stored rows, newest-wins (the mask-and-union writer) — so
+        query results are identical before and after by construction
         (tests/test_realtime.py).
 
         Absorbed segment DIRECTORIES are retained one absorb cycle (the
@@ -531,18 +536,7 @@ class SearchJob:
             segs = sorted(self._rt_segments())
             if not segs:
                 return
-            fetched_all = None
-            for k in segs:
-                df = self.spark.read.parquet(
-                    os.path.join(self._seg_path(k), "fetched")
-                )
-                fetched_all = (
-                    df if fetched_all is None
-                    else fetched_all.unionByName(
-                        df, allowMissingColumns=True
-                    )
-                )
-            self.merge_delta(fetched_all)
+            self._write_generation({t: self._overlaid(t) for t in _TABLES})
             # clear THEN retain: a crash between the two leaves the dirs
             # orphaned (swept by the next append), never double-served
             self._rt_commit_segments([])
@@ -550,75 +544,66 @@ class SearchJob:
 
     def _rt_touched(self, k: int) -> DataFrame:
         """Doc ids segment ``k`` has an opinion about: docs it (re)indexed
-        plus docs it deleted — the anti-join mask for everything older."""
+        plus docs it deleted — the anti-join mask for everything older.
+        Both sides are unique and disjoint (_docs_and_gone), so the union
+        needs no distinct."""
         seg = self._seg_path(k)
-        ids = (
-            self.spark.read.schema(META_READ)
-            .parquet(os.path.join(seg, "docs_meta"))
-            .select(F.col("doc_id").alias("doc"))
+        ids = self._read(os.path.join(seg, "docs_meta"), "meta").select(
+            F.col("doc_id").alias("doc")
         )
-        gone = (
-            self.spark.read.schema("doc long")
-            .parquet(os.path.join(seg, "gone"))
-            .select("doc")
+        gone = self.spark.read.schema("doc long").parquet(
+            os.path.join(seg, "gone")
         )
-        return ids.unionByName(gone).distinct()
+        return ids.unionByName(gone)
+
+    def _seg_layers(self, read) -> list[tuple[DataFrame, DataFrame]]:
+        """(touched ids, ``read(segment directory)``) per committed realtime
+        segment, oldest first — the layers _newest_wins lays over main."""
+        return [
+            (self._rt_touched(k), read(self._seg_path(k)))
+            for k in sorted(self._rt_segments())
+        ]
 
     def _overlay_probe(
         self, base: DataFrame, terms: list[str], sub: str
     ) -> DataFrame:
         """Newest-wins union of the main probe with every realtime
-        segment's probe: a doc any newer segment touched is masked out of
-        all older sources (segment deltas are round-sized → broadcast
-        anti-joins; each segment scan is bucket-pruned exactly like the
-        main one). Deleted docs simply have no rows in their segment."""
+        segment's probe (_newest_wins; each segment scan is bucket-pruned
+        exactly like the main one). Deleted docs simply have no rows in
+        their segment."""
         seg_schema = POSTINGS_READ if sub == "postings" else ZONE_READ
-        for k in sorted(self._rt_segments()):
-            seg_probe = probe_postings_bucketed(
-                self.spark, os.path.join(self._seg_path(k), sub), terms,
-                self.n_buckets, schema=seg_schema,
+        return _newest_wins(base, self._seg_layers(
+            lambda seg: probe_postings_bucketed(
+                self.spark, os.path.join(seg, sub), terms, self.n_buckets,
+                schema=seg_schema,
             )
-            base = base.join(
-                F.broadcast(self._rt_touched(k)), "doc", "left_anti"
-            ).unionByName(seg_probe)
-        return base
+        ))
 
     def _probe_main(self, terms: list[str], sub: str) -> DataFrame:
-        path, schema, empty = (
-            (self.index_path, POSTINGS_READ, POSTINGS_SCHEMA)
-            if sub == "postings"
-            else (self.zone_path, ZONE_READ, ZONE_SCHEMA)
-        )
+        tab = _TABLES["postings" if sub == "postings" else "zone"]
+        path = self._vpath(tab.main)
         if not os.path.isdir(path):
             # no main build yet (realtime-only serving)
-            return self.spark.createDataFrame([], empty)
+            return self.spark.createDataFrame([], tab.rows)
         return probe_postings_bucketed(
-            self.spark, path, terms, self.n_buckets, schema=schema
+            self.spark, path, terms, self.n_buckets, schema=tab.read
+        )
+
+    def _overlaid(self, table: str) -> DataFrame:
+        """``table`` as queries see it: the live main generation overlaid
+        with the realtime segments (newest-wins)."""
+        sub = _TABLES[table].seg
+        return _newest_wins(
+            self._main(table),
+            self._seg_layers(
+                lambda seg: self._read(os.path.join(seg, sub), table)
+            ),
+            _TABLES[table].key,
         )
 
     def _meta_df(self) -> DataFrame:
-        """The stored-doc table as queries see it: live main generation
-        overlaid with the realtime segments (newest-wins)."""
-        if os.path.isdir(self.meta_path):
-            base = (
-                self.spark.read.schema(META_READ).parquet(self.meta_path)
-                .select(*META_COLS)
-            )
-        else:
-            base = self.spark.createDataFrame([], META_SCHEMA)
-        for k in sorted(self._rt_segments()):
-            seg_meta = (
-                self.spark.read.schema(META_READ)
-                .parquet(os.path.join(self._seg_path(k), "docs_meta"))
-                .select(*META_COLS)
-            )
-            touched = self._rt_touched(k).select(
-                F.col("doc").alias("doc_id")
-            )
-            base = base.join(
-                F.broadcast(touched), "doc_id", "left_anti"
-            ).unionByName(seg_meta)
-        return base
+        """The stored-doc table as queries see it."""
+        return self._overlaid("meta")
 
     # -- qcache (repeated-query result memo) ----------------------------------
     def _normalize_query(
@@ -719,23 +704,7 @@ class SearchJob:
         pruning by construction (every word participates), but still the
         scale path for stats: it reads the stored index (word/tf columns,
         parquet-pruned) instead of re-tokenizing the corpus."""
-        if os.path.isdir(self.index_path):
-            base = (
-                self.spark.read.schema(POSTINGS_READ).parquet(self.index_path)
-                .drop("word_bucket")
-            )
-        else:
-            base = self.spark.createDataFrame([], POSTINGS_SCHEMA)
-        for k in sorted(self._rt_segments()):
-            seg = (
-                self.spark.read.schema(POSTINGS_READ)
-                .parquet(os.path.join(self._seg_path(k), "postings"))
-                .drop("word_bucket")
-            )
-            base = base.join(
-                F.broadcast(self._rt_touched(k)), "doc", "left_anti"
-            ).unionByName(seg)
-        return base
+        return self._overlaid("postings")
 
     # -- query families (all served from the stored, pruned index) -----------
     def probe(self, terms: list[str]) -> DataFrame:
@@ -971,38 +940,26 @@ class SearchJob:
             .collect()
         )
         buckets = sorted({r["b"] for r in rows})
-        if os.path.isdir(self.meta_path):
-            stored = (
-                self.spark.read.schema(META_READ).parquet(self.meta_path)
+
+        def pruned(path: str) -> DataFrame:
+            # segments are bucketed by the same hash as the main table:
+            # every scan touches ≤ len(ids) buckets, not n_buckets
+            return (
+                self.spark.read.schema(META_READ).parquet(path)
                 .filter(
                     F.col("doc_bucket").isin(buckets)
                     & F.col("doc_id").isin(ids)
                 )
                 .select("doc_id", "text")
             )
-        else:
-            stored = self.spark.createDataFrame(
-                [], "doc_id long, text string"
-            )
-        for k in sorted(self._rt_segments()):
-            seg_meta = (
-                self.spark.read.schema(META_READ)
-                .parquet(os.path.join(self._seg_path(k), "docs_meta"))
-                # same partition pruning as the main meta scan (round-5
-                # ADVICE low): segments are bucketed by the same hash, so
-                # each scan touches ≤ len(ids) buckets, not n_buckets
-                .filter(
-                    F.col("doc_bucket").isin(buckets)
-                    & F.col("doc_id").isin(ids)
-                )
-                .select("doc_id", "text")
-            )
-            touched = self._rt_touched(k).select(
-                F.col("doc").alias("doc_id")
-            )
-            stored = stored.join(
-                F.broadcast(touched), "doc_id", "left_anti"
-            ).unionByName(seg_meta)
+
+        stored = (
+            pruned(self.meta_path) if os.path.isdir(self.meta_path)
+            else self.spark.createDataFrame([], "doc_id long, text string")
+        )
+        stored = _newest_wins(stored, self._seg_layers(
+            lambda seg: pruned(os.path.join(seg, "docs_meta"))
+        ), "doc_id")
         hits = stored.select(F.col("doc_id").alias("doc"))
         return with_excerpts(
             hits, stored, terms, doc_col="doc_id",

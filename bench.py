@@ -39,6 +39,17 @@ def sf_of(path: str) -> float:
         return 0.1
 
 
+def driver_heap() -> str:
+    """$SPARK_GRAFT_MEM, else an eighth of physical memory clamped to
+    [1 GiB, 8 GiB] (perfbench's rule): the JVM shares the host with the
+    Python driver and the Python workers."""
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return (
+        os.environ.get("SPARK_GRAFT_MEM")
+        or f"{max(1024, min(8192, mem_mb // 8))}m"
+    )
+
+
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -70,7 +81,7 @@ def build_spark(cpus: int):
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g"))
+        .config("spark.driver.memory", driver_heap())
         .config("spark.ui.enabled", "false")
         .config(
             "spark.eventLog.enabled",
@@ -323,16 +334,19 @@ def main():
     }
     scaling = _scaling_evidence()
     if scaling:
-        out["scaling"] = scaling
+        # copied from BENCH_SCALING.json, not measured by this run
+        out["scaling_historical_32vcpu"] = scaling
     print(json.dumps(out))
 
 
 def _scaling_evidence() -> dict | None:
-    """Both scaling estimators, machine-readable, carried into BENCH_r{N}
-    (round-3 verdict next-round #7): the NOMINAL reversed-pair medians
-    (scripts/scaling_bench.py, un-fudged — the shared-host number) and the
-    PER-ACTUAL-CORE pairs (scripts/effective_cores.py — the cluster-faithful
-    estimator: on container-isolated executors nominal == actual). Reads
+    """HISTORICAL scaling evidence, copied as recorded: every figure was
+    measured on a 32-vCPU guest by the protocols below, none by this run.
+    Both scaling estimators, machine-readable: the NOMINAL reversed-pair
+    medians (scripts/scaling_bench.py, un-fudged — the shared-host number)
+    and the PER-ACTUAL-CORE pairs (scripts/effective_cores.py — the
+    cluster-faithful estimator: on container-isolated executors nominal ==
+    actual). Reads
     the evidence file those protocols write; absent → omitted."""
     p = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALING.json"

@@ -235,42 +235,6 @@ def test_form_map_file_loading(spark, tmp_path):
     assert got == {0, 1}
 
 
-def test_postings_bucketed_write_and_compact(spark, tmp_path):
-    from aspseek_spark.operators.postings import (
-        build_postings,
-        compact_postings,
-        write_postings_bucketed,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "a b a"), (1, "b c")], "doc_id long, text string"
-    )
-    p = build_postings(docs, "doc_id", "text")
-    main = str(tmp_path / "main")
-    write_postings_bucketed(p, main, n_buckets=4)
-    back = spark.read.parquet(main)
-    assert back.count() == p.count()
-
-    delta_docs = spark.createDataFrame([(0, "a d")], "doc_id long, text string")
-    delta = build_postings(delta_docs, "doc_id", "text")
-    out = str(tmp_path / "merged")
-    compact_postings(spark, main, delta, out, n_buckets=4)
-    merged = spark.read.parquet(out)
-    # REPLACE semantics (round 4): doc 0 was re-crawled, so its postings
-    # are the delta's alone — 'a' tf 1, old 'b' gone, new 'd' present
-    d0 = {
-        r["word"]: r["tf"]
-        for r in merged.filter("doc = 0").collect()
-    }
-    assert d0 == {"a": 1, "d": 1}
-    # untouched doc 1 carries over intact
-    d1 = {
-        r["word"]: r["tf"]
-        for r in merged.filter("doc = 1").collect()
-    }
-    assert d1 == {"b": 1, "c": 1}
-
-
 def test_bucketed_postings_probe_prunes_partitions(spark, tmp_path):
     """The q35 scale path: a term probe against the stored bucketed index
     must PRUNE to the terms' word-hash buckets (PartitionFilters in the

@@ -155,6 +155,121 @@ def test_merge_realtime_absorbs_with_identical_results(rt_job, spark):
     )
 
 
+def test_absorb_tokenizes_nothing_and_segments_keep_no_raw_rows(
+    rt_job, spark, monkeypatch
+):
+    """A segment stores its index tables and no copy of the raw fetched
+    rows, and merge_realtime writes those tables into the main generation
+    without calling any tokenizer — replies are identical after it."""
+    import aspseek_spark.operators.postings as postings_mod
+    import aspseek_spark.plans.search_job as search_job_mod
+
+    rt_job.add_realtime(spark.createDataFrame(
+        [(2, "http://h9.test/new", 900, "h9.test", 1, 200,
+          "freshword spark only"),
+         (2, "http://h0.test/p0", 0, "h0.test", 1, 200, "rev1 spark")],
+        SCHEMA,
+    ))
+    rt_job.add_realtime(spark.createDataFrame(
+        [(3, "http://h1.test/p1", 1, "h1.test", 1, 404, None)], SCHEMA
+    ))
+    for k in rt_job._rt_segments():
+        assert sorted(os.listdir(rt_job._seg_path(k))) == [
+            "docs_meta", "gone", "postings", "zone"
+        ]
+    queries = [
+        "spark", "freshword | rev1", "filler0 | filler1", "site:h9.test"
+    ]
+
+    def replies():
+        return {
+            q: sorted(
+                (r["doc"], r["score"])
+                for r in rt_job.search_query(q).collect()
+            )
+            for q in queries
+        }
+
+    def tokenizer_called(*args, **kwargs):
+        raise AssertionError("the absorb re-tokenized documents")
+
+    pre = replies()
+    with monkeypatch.context() as m:
+        m.setattr(search_job_mod, "build_postings", tokenizer_called)
+        m.setattr(search_job_mod, "build_zone_postings", tokenizer_called)
+        m.setattr(search_job_mod, "write_index_bucketed", tokenizer_called)
+        m.setattr(postings_mod, "tokens_col", tokenizer_called)
+        rt_job.merge_realtime()
+    assert rt_job._rt_segments() == []
+    assert replies() == pre
+
+
+def test_merges_keep_one_row_per_doc_word(spark, tmp_path_factory):
+    """Every stored postings and zone table holds one row per (doc, word)
+    — the invariant docs_with_all and word_doc_freq(unique_doc_word=) rely
+    on — after merge_delta and after absorbing two segments that revisit
+    a doc in both, 404 a doc in the newer one and re-add a doc deleted
+    earlier. The absorbed generation equals a fresh build over the same
+    fetched history."""
+    job = SearchJob(
+        spark, str(tmp_path_factory.mktemp("rt_unique")), n_buckets=8,
+        rt_max_segments=None,
+    )
+    history = list(_base_rows())
+
+    def delta(rows):
+        history.extend(rows)
+        return spark.createDataFrame(rows, SCHEMA)
+
+    def assert_unique(path):
+        rows = spark.read.parquet(path)
+        assert rows.count() > 0
+        dup = rows.groupBy("doc", "word").count().filter("count > 1")
+        assert dup.count() == 0, path
+
+    job.build_from_fetched(spark.createDataFrame(_base_rows(), SCHEMA))
+    job.merge_delta(delta([
+        (2, "http://h0.test/p0", 0, "h0.test", 1, 200, "spark spark merged"),
+        (2, "http://h1.test/p1", 1, "h1.test", 1, 404, None),
+    ]))
+    assert_unique(job.index_path)
+    assert_unique(job.zone_path)
+    job.add_realtime(delta([
+        (3, "http://h2.test/p2", 2, "h2.test", 1, 200, "rev1 spark data"),
+        (3, "http://h1.test/p1", 1, "h1.test", 1, 200, "back again spark"),
+        (3, "http://h1.test/p4", 4, "h1.test", 1, 200, "doomed spark"),
+    ]))
+    job.add_realtime(delta([
+        (4, "http://h2.test/p2", 2, "h2.test", 1, 200, "rev2 spark spark"),
+        (4, "http://h1.test/p4", 4, "h1.test", 1, 404, None),
+    ]))
+    job.merge_realtime()
+    assert_unique(job.index_path)
+    assert_unique(job.zone_path)
+
+    fresh = SearchJob(
+        spark, str(tmp_path_factory.mktemp("rt_unique_fresh")), n_buckets=8
+    )
+    fresh.build_from_fetched(spark.createDataFrame(history, SCHEMA))
+
+    def rows(path):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in spark.read.parquet(path).collect()
+        )
+
+    for attr in ("index_path", "zone_path", "meta_path"):
+        assert rows(getattr(job, attr)) == rows(getattr(fresh, attr)), attr
+    tf = {
+        r["word"]: r["tf"]
+        for r in spark.read.parquet(job.index_path)
+        .filter(F.col("doc") == 2).collect()
+    }
+    assert tf == {"rev2": 1, "spark": 2}
+    assert 4 not in _docs(job.search_and(["doomed"]))
+    assert _docs(job.search_and(["back"])) == {1}
+
+
 def test_realtime_only_serving_then_merge_builds_main(spark, tmp_path_factory):
     """No main build ever ran: realtime segments alone serve queries, and
     merge_realtime turns them into the initial main generation."""

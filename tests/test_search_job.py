@@ -268,6 +268,44 @@ def test_merge_replaces_revisited_doc_postings(
     assert ex[1].startswith("replacement body")
 
 
+def test_merge_delta_replace_semantics(spark, tmp_path_factory):
+    """REPLACE semantics of the LSM merge (round 4): doc 0 re-crawled as
+    "a d" keeps only the delta's words and tf — old 'b' gone, 'a' tf 1,
+    new 'd' present — and untouched doc 1 carries over intact."""
+    schema = (
+        "round int, url_canon string, url_hash64 long, host string, "
+        "depth int, status int, text string"
+    )
+    job = SearchJob(
+        spark, str(tmp_path_factory.mktemp("replace_tf")), n_buckets=4
+    )
+    job.build_from_fetched(spark.createDataFrame(
+        [(1, "http://h.test/0", 0, "h.test", 1, 200, "a b a"),
+         (1, "http://h.test/1", 1, "h.test", 1, 200, "b c")],
+        schema,
+    ))
+    docs = spark.createDataFrame(
+        [(0, "a b a"), (1, "b c")], "doc_id long, text string"
+    )
+    assert (
+        spark.read.parquet(job.index_path).count()
+        == build_postings(docs, "doc_id", "text").count()
+    )
+    job.merge_delta(spark.createDataFrame(
+        [(2, "http://h.test/0", 0, "h.test", 1, 200, "a d")], schema
+    ))
+    merged = spark.read.parquet(job.index_path)
+
+    def tf(doc):
+        return {
+            r["word"]: r["tf"]
+            for r in merged.filter(F.col("doc") == doc).collect()
+        }
+
+    assert tf(0) == {"a": 1, "d": 1}
+    assert tf(1) == {"b": 1, "c": 1}
+
+
 def test_merge_deletes_gone_docs(spark, fetched_fixture, tmp_path_factory):
     """The reference's delete pass: a URL answering 404 on revisit leaves
     postings AND the stored-text table in the merged generation."""
