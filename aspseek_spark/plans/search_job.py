@@ -41,11 +41,11 @@ driver contract reads plain parquet tables — right answers, wrong plan at
                         ~len(terms)/n_buckets of the index instead of
                         re-reading the corpus.
 
-All three persisted tables — postings, zone postings, docs_meta — live in
-versioned directories named by ONE pointer file (``postings.version``,
-atomic os.replace): a single flip publishes a consistent generation of all
-three (round-4 verdict fix #1: the zone index previously sat outside the
-versioning and served stale/deleted docs after a merge).
+ONE manifest (``manifest.json``) names the live generation of all three
+persisted tables — postings, zone postings, docs_meta — and the realtime
+segments: every mutation is one atomic commit and every query reads one
+snapshot (round-4 verdict fix #1: the zone index previously sat outside
+the versioning and served stale/deleted docs after a merge).
 
 tests/test_search_job.py asserts every family returns IDENTICAL answers to
 the inline-tokenize computation over the same documents, and that the
@@ -54,6 +54,8 @@ query-time scan actually partition-prunes.
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 import shutil
 import threading
@@ -87,6 +89,7 @@ from ..operators.postings import (
     write_index_bucketed,
     write_postings_bucketed,
 )
+from ..sources.manifest import publish_manifest, read_manifest
 
 # one stored table: main-generation directory base (``{main}_v{N}``),
 # segment sub-directory, read schema (with the partition column), row
@@ -170,6 +173,19 @@ def _newest_wins(
     return base
 
 
+def _reads_snapshot(fn):
+    """Run a public read against ONE manifest snapshot: the outermost read
+    on a thread pins it, nested reads (search_not → search_and, render_page
+    → search_cached, …) reuse it — a reply never mixes two commits."""
+    @functools.wraps(fn)
+    def read(self, *args, **kwargs):
+        if getattr(self._pin, "doc", None) is not None:
+            return fn(self, *args, **kwargs)
+        with self._pinned(self._manifest()):
+            return fn(self, *args, **kwargs)
+    return read
+
+
 class SearchJob:
     def __init__(
         self,
@@ -190,7 +206,7 @@ class SearchJob:
         self.rt_max_segments = rt_max_segments
         # qcache analog ([R:src/qcache.cpp]; round-3 verdict missing #2):
         # normalized query → (index epoch, materialized persisted result).
-        # Keyed on the live index EPOCH (version pointer + realtime segment
+        # Keyed on the manifest's EPOCH (live generation + realtime segment
         # list), so every build/merge/realtime-append invalidates
         # implicitly — a stale entry is simply never returned.
         from collections import OrderedDict
@@ -201,95 +217,123 @@ class SearchJob:
         self._qcache_entries = qcache_entries
         self.qcache_hits = 0
         self.qcache_misses = 0
-        # serializes realtime-tier MUTATIONS (append / absorb) so a
-        # deferred background absorb (round-5 verdict next-round #3) can
-        # overlap the crawl's next round without racing the pointer
-        # protocol; queries never take it — they read pointer snapshots
-        self._rt_lock = threading.RLock()
+        # serializes every mutation and the sweep (so a deferred background
+        # absorb — round-5 verdict next-round #3 — can overlap the crawl's
+        # next round, and the sweep never runs beside an unfinished write);
+        # queries never take it — they read manifest snapshots
+        self._lock = threading.RLock()
+        self._pin = threading.local()  # this thread's manifest snapshot
 
-    # -- versioned index layout (round-3 ADVICE: atomic swap) -----------------
-    # The live generation is postings_v{N} + zone_postings_v{N} +
-    # docs_meta_v{N}; a one-int pointer file names N and is replaced
-    # atomically (os.replace — the same manifest pattern StateStore uses).
-    # A crash mid-merge leaves the pointer on the old version with the old
-    # directories intact; the half-built next version is clobbered by the
-    # retry. The just-replaced version is RETAINED one generation so
-    # in-flight readers that resolved it before a flip can finish; only
-    # older generations are GC'd.
+    # -- the manifest (round-3 ADVICE: atomic swap) ---------------------------
+    # ONE JSON file names everything live: ``version`` (the main generation
+    # postings_v{N} + zone_postings_v{N} + docs_meta_v{N}), ``segments``
+    # (realtime/seg_k) and ``retained`` — the generation a flip replaced
+    # and the segments it absorbed, kept for in-flight readers until the
+    # NEXT flip. Every mutation publishes it with one os.replace; a crash
+    # before that leaves the old manifest and its directories intact, and
+    # whatever the attempt wrote is unnamed and swept.
     @property
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "postings.version")
+    def _manifest_path(self) -> str:
+        return os.path.join(self.root, "manifest.json")
 
-    def _live_version(self) -> int | None:
+    def _manifest(self) -> dict:
+        return read_manifest(self._manifest_path) or {
+            "version": None, "segments": [],
+            "retained": {"version": None, "segments": []},
+        }
+
+    @contextmanager
+    def _pinned(self, doc: dict):
+        prev = getattr(self._pin, "doc", None)
+        self._pin.doc = doc
         try:
-            with open(self._ptr_path) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+            yield doc
+        finally:
+            self._pin.doc = prev
 
-    def _vpath(self, base: str) -> str:
-        v = self._live_version()
-        if v is None:
-            # not built yet: a path no reader finds a directory at
-            return os.path.join(self.root, base)
-        return os.path.join(self.root, f"{base}_v{v}")
+    def _snap(self) -> dict:
+        """The snapshot pinned by this thread's read or mutation, else the
+        live manifest."""
+        return getattr(self._pin, "doc", None) or self._manifest()
+
+    def _gen_dir(self, version: int | None, table: str) -> str:
+        # not built yet (None): a path no reader finds a directory at
+        suffix = "" if version is None else f"_v{version}"
+        return os.path.join(self.root, _TABLES[table].main + suffix)
 
     @property
     def index_path(self) -> str:
-        return self._vpath("postings")
+        return self._gen_dir(self._snap()["version"], "postings")
 
     @property
     def zone_path(self) -> str:
-        """Zone index (tf_title/tf_body per doc-word) — versioned under the
-        SAME pointer as the main index, so a merge moves it in lockstep."""
-        return self._vpath("zone_postings")
+        """Zone index (tf_title/tf_body per doc-word) — versioned in
+        lockstep with the main index."""
+        return self._gen_dir(self._snap()["version"], "zone")
 
     @property
     def meta_path(self) -> str:
         """Stored doc table (doc_id, host, text, title, content_md5,
         fetched_unix) — the excerpt source, versioned in lockstep with the
-        main index (one pointer flips all three tables) and PARTITIONED by
-        doc_bucket = pmod(xxhash64(doc_id), n_buckets) so a results page's
-        excerpt probe prunes to ≤ page_size buckets."""
-        return self._vpath("docs_meta")
+        main index and PARTITIONED by doc_bucket = pmod(xxhash64(doc_id),
+        n_buckets) so a results page's excerpt probe prunes to ≤ page_size
+        buckets."""
+        return self._gen_dir(self._snap()["version"], "meta")
 
-    def _epoch(self) -> tuple:
+    def _epoch(self, doc: dict | None = None) -> tuple:
         """Cache/invalidation epoch: main generation + committed realtime
-        segments. Any build, merge, realtime append or realtime absorb
-        changes it."""
-        return (self._live_version(), tuple(self._rt_segments()))
+        segments — every mutation but an empty absorb changes it."""
+        doc = doc or self._snap()
+        return (doc["version"], tuple(doc["segments"]))
 
-    def _flip_to(self, version: int) -> None:
-        tmp = self._ptr_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._ptr_path)
-        # stale qcache entries die WITH the flip, before _gc_versions can
-        # delete the directories their recompute paths would read
-        self._qcache_sweep(self._epoch())
+    @contextmanager
+    def _mutation(self):
+        """Serialize with the other mutations, pin the live manifest and
+        sweep what it does not name before anything is written."""
+        with self._lock, self._pinned(self._manifest()) as doc:
+            self._sweep(doc)
+            yield doc
 
-    def _gc_versions(self, newest: int) -> None:
-        """Drop generations older than newest-1 (keep live + previous)."""
-        for k in range(0, max(0, newest - 1)):
-            for tab in _TABLES.values():
-                shutil.rmtree(
-                    os.path.join(self.root, f"{tab.main}_v{k}"),
-                    ignore_errors=True,
-                )
+    def _commit(self, doc: dict) -> None:
+        """Publish ``doc`` (the commit point), drop qcache entries of older
+        epochs before the sweep deletes what they would recompute from,
+        and sweep."""
+        publish_manifest(self._manifest_path, doc)
+        self._qcache_sweep(self._epoch(doc))
+        self._sweep(doc)
+
+    def _sweep(self, doc: dict) -> None:
+        """Delete every generation and segment directory ``doc`` names
+        neither live nor retained: what a flip released and what a crashed
+        mutation wrote."""
+        named = {
+            self._gen_dir(v, t) for t in _TABLES
+            for v in (doc["version"], doc["retained"]["version"])
+        } | {
+            self._seg_path(k)
+            for k in doc["segments"] + doc["retained"]["segments"]
+        }
+        for path in [self._seg_path("*")] + [
+            self._gen_dir("*", t) for t in _TABLES
+        ]:
+            for found in glob.glob(path):
+                if found not in named:
+                    shutil.rmtree(found, ignore_errors=True)
+
+    def _flip(self, version: int, absorbed=()) -> None:
+        """Commit ``version`` as the live generation, retaining the
+        replaced one and the segments just ``absorbed`` into it."""
+        doc = self._snap()
+        self._commit({
+            "version": version,
+            "segments": [k for k in doc["segments"] if k not in absorbed],
+            "retained": {"version": doc["version"], "segments": list(absorbed)},
+        })
 
     def _next_dirs(self) -> tuple[int, dict[str, str]]:
-        """The next generation's number and its table directories (a
-        crashed prior attempt's files are overwritten by the writes)."""
-        v = self._live_version()
+        v = self._snap()["version"]
         nxt = 0 if v is None else v + 1
-        return nxt, {
-            t: os.path.join(self.root, f"{tab.main}_v{nxt}")
-            for t, tab in _TABLES.items()
-        }
-
-    def _publish(self, version: int) -> None:
-        self._flip_to(version)
-        self._gc_versions(version)
+        return nxt, {t: self._gen_dir(nxt, t) for t in _TABLES}
 
     def _write_docs(
         self, docs: DataFrame, dirs: dict[str, str], title_col: str | None
@@ -309,27 +353,27 @@ class SearchJob:
             .drop("word_bucket", "doc_bucket")
         )
 
-    def _main(self, table: str) -> DataFrame:
-        """The live main generation's rows of ``table`` (empty before the
-        first build — realtime-only serving)."""
-        path = self._vpath(_TABLES[table].main)
+    def _main(self, table: str, read=None) -> DataFrame:
+        """``read(dir)`` (default: every row) of the pinned main generation
+        of ``table``; empty before the first build (realtime-only
+        serving)."""
+        path = self._gen_dir(self._snap()["version"], table)
         if not os.path.isdir(path):
             return self.spark.createDataFrame([], _TABLES[table].rows)
-        return self._read(path, table)
+        return (read or functools.partial(self._read, table=table))(path)
 
-    def _write_generation(self, rows: dict[str, DataFrame]) -> None:
+    def _write_generation(self, rows: dict[str, DataFrame], absorbed=()):
         """Write ``rows[table]`` as the next main generation of each table
-        and publish all three with one pointer flip. Callers pass the live
-        tables overlaid by _newest_wins (the mask-and-union writer): each
-        doc's rows come from one source, so no (doc, word) regroup is
-        needed."""
+        and flip to it. Callers pass the pinned tables overlaid by
+        _newest_wins (the mask-and-union writer): each doc's rows come from
+        one source, so no (doc, word) regroup is needed."""
         nxt, dirs = self._next_dirs()
         for t, df in rows.items():
             if t == "meta":
                 write_docs_meta(df, dirs[t], self.n_buckets)
             else:
                 write_postings_bucketed(df, dirs[t], self.n_buckets)
-        self._publish(nxt)
+        self._flip(nxt, absorbed)
 
     # -- build / refresh -----------------------------------------------------
     def build_from_fetched(self, fetched: DataFrame) -> None:
@@ -343,11 +387,11 @@ class SearchJob:
         The delete pass applies HERE too (round-5 ADVICE high): a URL
         fetched 200 in an early round and 404/410 in a later one must not
         be indexed from its stale 200 body."""
-        nxt, dirs = self._next_dirs()
         title_col = "title" if "title" in fetched.columns else None
-        with _docs_and_gone(fetched) as (docs, _):
+        with self._mutation(), _docs_and_gone(fetched) as (docs, _):
+            nxt, dirs = self._next_dirs()
             self._write_docs(docs, dirs, title_col)
-        self._publish(nxt)
+            self._flip(nxt)
 
     def merge_delta(self, fetched_delta: DataFrame) -> None:
         """LSM merge (SNK2): tokenize only the delta, then lay it over the
@@ -356,12 +400,12 @@ class SearchJob:
         together: a revisited doc's rows are replaced by its new body, a
         URL whose LATEST delta row answers 404/410 leaves all three (the
         reference's delete pass), untouched docs carry over — then
-        atomically flip the pointer file (the reference's periodic `index`
+        atomically publish the manifest (the reference's periodic `index`
         merge). There is no window with no live index: a crash before the
-        flip leaves the old pointer + old directories; the replaced
-        generation survives one merge for in-flight readers."""
+        publish leaves the old manifest + old directories; the replaced
+        generation survives one flip for in-flight readers."""
         title_col = "title" if "title" in fetched_delta.columns else None
-        with _docs_and_gone(fetched_delta) as (docs, gone):
+        with self._mutation(), _docs_and_gone(fetched_delta) as (docs, gone):
             touched = docs.select(
                 F.col("doc_id").alias("doc")
             ).unionByName(gone)
@@ -383,80 +427,17 @@ class SearchJob:
     # -- "What's missing" #1) --------------------------------------------------
     # A realtime SEGMENT is one crawl round's delta, indexed immediately
     # into its own small bucketed directories (postings/zone/docs_meta/gone;
-    # no raw fetched rows — the absorb reads these tables). Segments are
-    # invisible until their id is committed to the ``realtime.segments``
-    # pointer (atomic os.replace), so a crash mid-append leaves an orphan
-    # directory the retry clobbers — never a half-readable segment. Queries
-    # overlay segments over the main index newest-wins; merge_realtime()
-    # absorbs them into the next main generation and clears the pointer.
+    # no raw fetched rows — the absorb reads these tables). A segment is
+    # invisible until the manifest names it, so a crash mid-append leaves an
+    # unnamed directory the retry's sweep deletes — never a half-readable
+    # segment. Queries overlay segments over the main index newest-wins;
+    # merge_realtime() absorbs them into the next main generation.
     @property
     def rt_dir(self) -> str:
         return os.path.join(self.root, "realtime")
 
-    @property
-    def _rt_ptr(self) -> str:
-        return os.path.join(self.root, "realtime.segments")
-
-    def _rt_segments(self) -> list[int]:
-        try:
-            with open(self._rt_ptr) as f:
-                s = f.read().strip()
-        except FileNotFoundError:
-            return []
-        return [int(x) for x in s.split(",") if x]
-
-    def _rt_commit_segments(self, segs: list[int]) -> None:
-        tmp = self._rt_ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(",".join(str(s) for s in segs))
-        os.replace(tmp, self._rt_ptr)
-        self._qcache_sweep(self._epoch())
-
     def _seg_path(self, k: int) -> str:
         return os.path.join(self.rt_dir, f"seg_{k}")
-
-    @property
-    def _rt_gc_ptr(self) -> str:
-        return os.path.join(self.root, "realtime.gc")
-
-    def _rt_pending_gc(self) -> list[int]:
-        """Absorbed-but-retained segment ids: merge_realtime keeps the
-        just-absorbed segment directories ONE absorb cycle for in-flight
-        readers that resolved the segment list before the flip (the
-        realtime analog of _gc_versions' keep-previous-generation rule);
-        the NEXT absorb deletes them."""
-        try:
-            with open(self._rt_gc_ptr) as f:
-                s = f.read().strip()
-        except FileNotFoundError:
-            return []
-        return [int(x) for x in s.split(",") if x]
-
-    def _rt_commit_gc(self, segs: list[int]) -> None:
-        tmp = self._rt_gc_ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(",".join(str(s) for s in segs))
-        os.replace(tmp, self._rt_gc_ptr)
-
-    def _rt_sweep_orphans(self) -> None:
-        """Delete segment directories that are neither committed nor
-        retained for readers — i.e. half-appends from a crash between the
-        directory write and the ``realtime.segments`` commit. Called under
-        the realtime lock before ids are assigned, so an orphan's id can
-        be reused safely."""
-        live = set(self._rt_segments()) | set(self._rt_pending_gc())
-        if not os.path.isdir(self.rt_dir):
-            return
-        for name in os.listdir(self.rt_dir):
-            if name.startswith("seg_"):
-                try:
-                    k = int(name[4:])
-                except ValueError:
-                    continue
-                if k not in live:
-                    shutil.rmtree(
-                        os.path.join(self.rt_dir, name), ignore_errors=True
-                    )
 
     def needs_absorb(self) -> bool:
         """True when the committed segment count exceeds the auto-merge
@@ -464,7 +445,7 @@ class SearchJob:
         should run merge_realtime to re-bound the per-query fan-out."""
         return (
             self.rt_max_segments is not None
-            and len(self._rt_segments()) > self.rt_max_segments
+            and len(self._snap()["segments"]) > self.rt_max_segments
         )
 
     def add_realtime(
@@ -487,60 +468,51 @@ class SearchJob:
         needs_absorb() and runs merge_realtime itself (the crawl loop
         submits it to a background thread so the absorb overlaps the next
         round's schedule phase instead of sitting on the round's critical
-        path — round-5 verdict next-round #3). Mutations are serialized by
-        _rt_lock; ids are never reused while a reader could still hold the
-        directory (absorbed segments sit in the pending-GC list one cycle,
-        and id assignment counts them)."""
-        with self._rt_lock:
-            return self._add_realtime_locked(fetched_delta, defer_merge)
-
-    def _add_realtime_locked(self, fetched_delta, defer_merge) -> int:
-        segs = self._rt_segments()
-        self._rt_sweep_orphans()  # crashed half-appends die here
-        k = max(segs + self._rt_pending_gc(), default=-1) + 1
-        seg = self._seg_path(k)
-        # a doc whose LATEST row in this delta is 404/410 does not enter
-        # the segment's own index either (one crawl round can't produce
-        # both, but a caller batching several rounds into one append can)
+        path — round-5 verdict next-round #3). Ids are never reused while a
+        reader could still hold the directory: the next id is one past
+        every segment the manifest names, retained ones included."""
         title_col = "title" if "title" in fetched_delta.columns else None
-        with _docs_and_gone(fetched_delta) as (docs, gone):
+        with self._mutation() as doc, \
+                _docs_and_gone(fetched_delta) as (docs, gone):
+            segs = doc["segments"]
+            k = max(segs + doc["retained"]["segments"], default=-1) + 1
+            seg = self._seg_path(k)
+            # a doc whose LATEST row in this delta is 404/410 does not enter
+            # the segment's own index either (one crawl round can't produce
+            # both, but a caller batching several rounds into one append can)
             self._write_docs(docs, {
                 t: os.path.join(seg, tab.seg) for t, tab in _TABLES.items()
             }, title_col)
             gone.write.mode("overwrite").parquet(os.path.join(seg, "gone"))
-        self._rt_commit_segments(segs + [k])
+            self._commit({**doc, "segments": segs + [k]})
         if not defer_merge and self.needs_absorb():
             # periodic merge pass: bound the per-query segment fan-out
             self.merge_realtime()
         return k
 
     def merge_realtime(self) -> None:
-        """Absorb every realtime segment into the next MAIN generation and
-        clear the segment pointer. The absorb tokenizes nothing: each table
-        of the next generation is the overlay queries already read — the
-        main table masked by every newer segment's touched docs, plus that
-        segment's stored rows, newest-wins (the mask-and-union writer) — so
-        query results are identical before and after by construction
+        """Absorb every realtime segment into the next MAIN generation —
+        one manifest commit flips the generation and clears the segment
+        list. The absorb tokenizes nothing: each table of the next
+        generation is the overlay queries already read — the main table
+        masked by every newer segment's touched docs, plus that segment's
+        stored rows, newest-wins (the mask-and-union writer) — so query
+        results are identical before and after by construction
         (tests/test_realtime.py).
 
-        Absorbed segment DIRECTORIES are retained one absorb cycle (the
-        pending-GC list) so concurrent readers that resolved the segment
-        list before the pointer flip finish against intact files; the next
-        absorb deletes them. Serialized with appends via _rt_lock."""
-        with self._rt_lock:
-            # previous cycle's retained segments: their readers are long
-            # done (one full absorb cycle has passed) — delete now
-            for k in self._rt_pending_gc():
-                shutil.rmtree(self._seg_path(k), ignore_errors=True)
-            self._rt_commit_gc([])
-            segs = sorted(self._rt_segments())
-            if not segs:
-                return
-            self._write_generation({t: self._overlaid(t) for t in _TABLES})
-            # clear THEN retain: a crash between the two leaves the dirs
-            # orphaned (swept by the next append), never double-served
-            self._rt_commit_segments([])
-            self._rt_commit_gc(segs)
+        Absorbed segment DIRECTORIES are retained (the manifest's
+        ``retained`` part) so concurrent readers that resolved the
+        manifest before the flip finish against intact files; the next
+        flip — or an absorb with nothing to absorb — releases them."""
+        with self._mutation() as doc:
+            if doc["segments"]:
+                self._write_generation(
+                    {t: self._overlaid(t) for t in _TABLES},
+                    absorbed=doc["segments"],
+                )
+            elif doc["retained"]["segments"]:
+                retained = {**doc["retained"], "segments": []}
+                self._commit({**doc, "retained": retained})
 
     def _rt_touched(self, k: int) -> DataFrame:
         """Doc ids segment ``k`` has an opinion about: docs it (re)indexed
@@ -557,50 +529,36 @@ class SearchJob:
         return ids.unionByName(gone)
 
     def _seg_layers(self, read) -> list[tuple[DataFrame, DataFrame]]:
-        """(touched ids, ``read(segment directory)``) per committed realtime
-        segment, oldest first — the layers _newest_wins lays over main."""
+        """(touched ids, ``read(segment directory)``) per segment of the
+        pinned manifest, oldest first — the layers _newest_wins lays over
+        main."""
         return [
             (self._rt_touched(k), read(self._seg_path(k)))
-            for k in sorted(self._rt_segments())
+            for k in sorted(self._snap()["segments"])
         ]
 
-    def _overlay_probe(
-        self, base: DataFrame, terms: list[str], sub: str
-    ) -> DataFrame:
-        """Newest-wins union of the main probe with every realtime
-        segment's probe (_newest_wins; each segment scan is bucket-pruned
-        exactly like the main one). Deleted docs simply have no rows in
-        their segment."""
-        seg_schema = POSTINGS_READ if sub == "postings" else ZONE_READ
-        return _newest_wins(base, self._seg_layers(
-            lambda seg: probe_postings_bucketed(
-                self.spark, os.path.join(seg, sub), terms, self.n_buckets,
-                schema=seg_schema,
-            )
-        ))
-
-    def _probe_main(self, terms: list[str], sub: str) -> DataFrame:
-        tab = _TABLES["postings" if sub == "postings" else "zone"]
-        path = self._vpath(tab.main)
-        if not os.path.isdir(path):
-            # no main build yet (realtime-only serving)
-            return self.spark.createDataFrame([], tab.rows)
-        return probe_postings_bucketed(
-            self.spark, path, terms, self.n_buckets, schema=tab.read
-        )
-
-    def _overlaid(self, table: str) -> DataFrame:
-        """``table`` as queries see it: the live main generation overlaid
-        with the realtime segments (newest-wins)."""
+    def _overlaid(self, table: str, read=None) -> DataFrame:
+        """``table`` as queries see it: the pinned main generation overlaid
+        with the pinned realtime segments, newest-wins. ``read(dir)`` scans
+        one table directory (default: every row)."""
+        read = read or functools.partial(self._read, table=table)
         sub = _TABLES[table].seg
         return _newest_wins(
-            self._main(table),
-            self._seg_layers(
-                lambda seg: self._read(os.path.join(seg, sub), table)
-            ),
+            self._main(table, read),
+            self._seg_layers(lambda seg: read(os.path.join(seg, sub))),
             _TABLES[table].key,
         )
 
+    def _probe(self, terms: list[str], table: str) -> DataFrame:
+        """The overlaid ``table`` (postings or zone) probed for ``terms``:
+        the main and every segment scan prune to the terms' word buckets.
+        Deleted docs simply have no rows in their segment."""
+        return self._overlaid(table, lambda path: probe_postings_bucketed(
+            self.spark, path, terms, self.n_buckets,
+            schema=_TABLES[table].read,
+        ))
+
+    @_reads_snapshot
     def _meta_df(self) -> DataFrame:
         """The stored-doc table as queries see it."""
         return self._overlaid("meta")
@@ -638,14 +596,14 @@ class SearchJob:
         not just a re-accessed key (round-4 ADVICE): stale persisted
         DataFrames otherwise pin executor memory until LRU pressure, and a
         stale entry's cache-eviction recompute would read a generation
-        _gc_versions may already have deleted. Called on every flip
-        (build/merge/realtime commit) and defensively per lookup
-        (dict-sized, no jobs)."""
+        the sweep may already have deleted. Called on every manifest
+        commit and defensively per lookup (dict-sized, no jobs)."""
         stale = [k for k, (ep, _) in self._qcache.items() if ep != live_epoch]
         for k in stale:
             _, df = self._qcache.pop(k)
             df.unpersist()
 
+    @_reads_snapshot
     def search_cached(
         self, family: str, *args, links_version=None, **kwargs
     ) -> DataFrame:
@@ -697,6 +655,7 @@ class SearchJob:
             evicted.unpersist()
         return df
 
+    @_reads_snapshot
     def full_postings(self) -> DataFrame:
         """The COMPLETE postings relation — live main generation overlaid
         with every realtime segment, newest-wins — for corpus-wide
@@ -707,34 +666,40 @@ class SearchJob:
         return self._overlaid("postings")
 
     # -- query families (all served from the stored, pruned index) -----------
+    @_reads_snapshot
     def probe(self, terms: list[str]) -> DataFrame:
-        return self._overlay_probe(
-            self._probe_main(terms, "postings"), terms, "postings"
-        )
+        return self._probe(terms, "postings")
 
+    @_reads_snapshot
     def search_and(self, terms: list[str]) -> DataFrame:
         return docs_with_all(self.probe(terms), terms)
 
+    @_reads_snapshot
     def search_any(self, terms: list[str]) -> DataFrame:
         return docs_with_any(self.probe(terms), terms)
 
+    @_reads_snapshot
     def search_not(self, terms: list[str], minus: str) -> DataFrame:
         return docs_without(
             self.search_and(terms), self.probe([minus]), minus
         )
 
+    @_reads_snapshot
     def search_phrase(self, w1: str, w2: str) -> DataFrame:
         return phrase_match(self.probe([w1, w2]), w1, w2)
 
+    @_reads_snapshot
     def search_proximity(self, w1: str, w2: str, window: int) -> DataFrame:
         return proximity_match(self.probe([w1, w2]), w1, w2, window)
 
+    @_reads_snapshot
     def search_any_form(
         self, terms: list[str], form_map: dict[str, list[str]] | None = None
     ) -> DataFrame:
         expanded = expand_terms(terms, form_map)
         return docs_with_any(self.probe(expanded), expanded)
 
+    @_reads_snapshot
     def search_query(
         self, q: str, links_to: DataFrame | None = None
     ) -> DataFrame:
@@ -762,14 +727,15 @@ class SearchJob:
             site_of=site_of, links_to=links_to, fetched_at=fetched_at,
         )
 
+    @_reads_snapshot
     def search_zone_ranked(
         self, terms: list[str], title_weight: int = 8, k: int = 10
     ) -> DataFrame:
-        zp = self._overlay_probe(
-            self._probe_main(terms, "zone"), terms, "zone"
+        return rank_zone_weighted(
+            self._probe(terms, "zone"), terms, title_weight, k
         )
-        return rank_zone_weighted(zp, terms, title_weight, k)
 
+    @_reads_snapshot
     def search_ranked(
         self,
         terms: list[str],
@@ -799,6 +765,7 @@ class SearchJob:
             page_size=page_size,
         )
 
+    @_reads_snapshot
     def search_excerpts(
         self,
         terms: list[str],
@@ -822,6 +789,7 @@ class SearchJob:
             before=before, width=width,
         )
 
+    @_reads_snapshot
     def search_excerpts_all(
         self,
         terms: list[str],
@@ -839,6 +807,7 @@ class SearchJob:
             doc_col="doc_id", before=before, width=width,
         )
 
+    @_reads_snapshot
     def render_page(
         self,
         terms: list[str],
@@ -914,6 +883,7 @@ class SearchJob:
             page=page, page_size=page_size, total=total,
         )
 
+    @_reads_snapshot
     def excerpts_for_page(
         self,
         terms: list[str],
@@ -950,16 +920,10 @@ class SearchJob:
                     F.col("doc_bucket").isin(buckets)
                     & F.col("doc_id").isin(ids)
                 )
-                .select("doc_id", "text")
+                .drop("doc_bucket")
             )
 
-        stored = (
-            pruned(self.meta_path) if os.path.isdir(self.meta_path)
-            else self.spark.createDataFrame([], "doc_id long, text string")
-        )
-        stored = _newest_wins(stored, self._seg_layers(
-            lambda seg: pruned(os.path.join(seg, "docs_meta"))
-        ), "doc_id")
+        stored = self._overlaid("meta", pruned).select("doc_id", "text")
         hits = stored.select(F.col("doc_id").alias("doc"))
         return with_excerpts(
             hits, stored, terms, doc_col="doc_id",

@@ -8,11 +8,11 @@ Process model here: ONE SparkSession shared by N concurrent client
 sessions (Spark schedules concurrent jobs from multiple threads natively;
 the driver is the daemon). Every request resolves the index epoch lazily
 through SearchJob, so a build/merge/realtime flip between two requests of
-one session is simply observed — and a flip DURING a request is safe
-because generations are retained one cycle after replacement
-(SearchJob._gc_versions keeps live + previous; absorbed realtime segments
-sit in the pending-GC list one absorb cycle). tests/test_searchd.py drives
-concurrent clients across a merge flip and asserts zero failed reads.
+one session is simply observed — and a flip DURING a request is safe: each
+request reads one snapshot of SearchJob's manifest, and the manifest
+retains the replaced generation and the segments it absorbed until the
+next flip. tests/test_searchd.py drives concurrent clients across a merge
+flip and asserts zero failed reads.
 
 Wire protocol (line-oriented, one session per TCP connection — the s.cgi↔
 searchd split re-expressed; deliberately netcat-debuggable):

@@ -31,15 +31,17 @@ sched_unix = doc_id·100 (the q58 `after:` stamp), content_md5 = md5(text)
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.manifest import publish_manifest, read_manifest
 from .search_job import SearchJob
 
 # bump when the adapter/index layout changes — stale on-disk caches rebuild
-_LAYOUT_VERSION = "v2"
+_LAYOUT_VERSION = "v3"
 _N_BUCKETS = 32
 
 _lock = threading.Lock()
@@ -93,23 +95,16 @@ def job_for(spark: SparkSession, sf_dir: str) -> SearchJob:
             return job
         slug = key.strip("/").replace("/", "_")
         root = os.path.join(_cache_root(), slug)
-        os.makedirs(root, exist_ok=True)
         job = SearchJob(spark, root, n_buckets=_N_BUCKETS)
         fp_path = os.path.join(root, "source.fp")
-        fp = _fingerprint(sf_dir)
-        on_disk = None
-        try:
-            with open(fp_path) as f:
-                on_disk = f.read().strip()
-        except FileNotFoundError:
-            pass
-        if on_disk != fp or job._live_version() is None:
+        fp = {"fingerprint": _fingerprint(sf_dir)}
+        # a root in an older layout has no manifest: rebuilt, fp unread
+        if job._manifest()["version"] is None or read_manifest(fp_path) != fp:
+            shutil.rmtree(root, ignore_errors=True)
             docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
             job.build_from_fetched(documents_as_fetched(docs))
-            tmp = fp_path + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(fp)
-            os.replace(tmp, fp_path)  # fingerprint commits AFTER the index
+            # the fingerprint commits AFTER the index
+            publish_manifest(fp_path, fp)
         _jobs[key] = job
         return job
 

@@ -6,10 +6,11 @@ seen / fetched tables whose snapshots make a killed job resume with an
 identical frontier (BASELINE.json:6,14). This image has no Iceberg jars
 (SURVEY.md §7 hard-part 5), so snapshot isolation is emulated with the same
 commit protocol Iceberg uses underneath: write immutable data files, then
-atomically publish a manifest (os.replace on manifest.json). A round is
-visible iff the manifest references it; partially-written rounds are
-invisible and simply overwritten on retry — combined with fully
-deterministic round logic this gives exactly-once-equivalent resume.
+atomically publish a manifest (sources/manifest.publish_manifest: one
+os.replace on manifest.json). A round is visible iff the manifest
+references it; partially-written rounds are invisible and simply
+overwritten on retry — combined with fully deterministic round logic this
+gives exactly-once-equivalent resume.
 
 Table layouts (all parquet, explicit schemas — FIXTURES.md):
 
@@ -49,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CrawlConfig
+from .manifest import publish_manifest, read_manifest
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -123,10 +125,8 @@ class StateStore:
         return os.path.join(self.root, "manifest.json")
 
     def last_committed_round(self) -> int | None:
-        if not os.path.exists(self._manifest_path):
-            return None
-        with open(self._manifest_path) as f:
-            return json.load(f)["last_round"]
+        doc = read_manifest(self._manifest_path)
+        return None if doc is None else doc["last_round"]
 
     def _publish(
         self,
@@ -143,10 +143,7 @@ class StateStore:
                 str(r): {str(v): ver for v, ver in m.items()}
                 for r, m in frontier_maps.items()
             }
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f, sort_keys=True)
-        os.replace(tmp, self._manifest_path)  # the atomic commit point
+        publish_manifest(self._manifest_path, doc)  # the commit point
 
     # -- paths --------------------------------------------------------------
     def _p(self, table: str, round_id: int) -> str:
@@ -170,10 +167,7 @@ class StateStore:
         """fpart → owning-round map for ``round_id``; None when the
         manifest retains no map for that round (not committed, or older
         than the two-round resume window)."""
-        if not os.path.exists(self._manifest_path):
-            return None
-        with open(self._manifest_path) as f:
-            maps = json.load(f).get("frontier_maps")
+        maps = (read_manifest(self._manifest_path) or {}).get("frontier_maps")
         if maps is None or str(round_id) not in maps:
             return None
         return {int(v): int(ver) for v, ver in maps[str(round_id)].items()}
@@ -300,22 +294,20 @@ class StateStore:
         only duplicate rows of its own delta — the membership set is
         unchanged. The committed delta files are always the source of truth.
         """
-        marker = {"upto_round": -1, "buckets": config.seen_buckets}
-        if os.path.exists(self._seen_bkt_marker):
-            with open(self._seen_bkt_marker) as f:
-                marker = json.load(f)
+        empty = {"upto_round": -1, "buckets": config.seen_buckets}
+        marker = read_manifest(self._seen_bkt_marker) or empty
         if marker["buckets"] != config.seen_buckets:
             # bucket-count drift: rebuild from scratch
             self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_bkt_name}")
             shutil.rmtree(self._seen_bkt_path, ignore_errors=True)
-            marker = {"upto_round": -1, "buckets": config.seen_buckets}
+            marker = empty
         if (
             marker["upto_round"] >= 0
             and not self.spark.catalog.tableExists(self._seen_bkt_name)
         ):
             if not os.path.isdir(self._seen_bkt_path):
                 # files gone (fresh root reusing a role) — rebuild
-                marker = {"upto_round": -1, "buckets": config.seen_buckets}
+                marker = empty
             else:
                 # Files present + marker current, but the saveAsTable entry
                 # lives in the SESSION's in-memory catalog — a resume in a
@@ -354,10 +346,7 @@ class StateStore:
                 .saveAsTable(self._seen_bkt_name)
             )
         marker["upto_round"] = max(done, upto_round)
-        tmp = self._seen_bkt_marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(marker, f)
-        os.replace(tmp, self._seen_bkt_marker)
+        publish_manifest(self._seen_bkt_marker, marker)
 
     def read_seen_bucketed(self, upto_round: int, config: CrawlConfig) -> DataFrame:
         """The seen set as a BUCKETED table (url_canon buckets): joining on

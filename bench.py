@@ -13,7 +13,8 @@ seed=42, so the cache is reproducible).
 Extra top-level keys (crawl_urls_per_sec, cpus) give the north-star
 throughput number; BASELINE.md documents the N-vs-4N scaling protocol
 (scripts/scaling_bench.py: interleaved local[2]/local[8] legs, realistic
-page sizes, stages/jobs-per-round from the event log).
+page sizes). Exact Spark job counts per crawl round come from
+``perfbench/run.py --trace 1`` (crawl_loop.jobs_per_round).
 """
 
 from __future__ import annotations
@@ -53,8 +54,6 @@ def driver_heap() -> str:
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
-    os.makedirs(os.path.join(REPO, ".cache", "events"), exist_ok=True)
-
     # shuffle partitioning defaults to the core count but is overridable so
     # scaling comparisons hold the PLAN constant and vary only parallelism
     shuffle_p = os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus))
@@ -83,15 +82,6 @@ def build_spark(cpus: int):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_heap())
         .config("spark.ui.enabled", "false")
-        .config(
-            "spark.eventLog.enabled",
-            "true"
-            if os.environ.get("SPARK_GRAFT_EVENTLOG", "") in ("1", "true")
-            else "false",
-        )
-        .config("spark.eventLog.dir", os.path.join(REPO, ".cache", "events"))
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
         .getOrCreate()
     )
 
@@ -188,34 +178,6 @@ def bench_crawl(
     return legs, t2 - t0, total_urls
 
 
-def _eventlog_counts(spark, window_ms: tuple[float, float]):
-    """(n_stages, n_jobs) submitted inside the wall window, from the app's
-    own event log. Spark buffers event-log writes and exposes no public
-    flush, so the .inprogress tail can be missing the last timed rounds'
-    events — counts are a LOWER BOUND (noted in the scaling evidence);
-    they are diagnostics only, never part of the throughput math."""
-    try:
-        app_id = spark.sparkContext.applicationId
-        base = os.path.join(REPO, ".cache", "events", app_id)
-        path = next(
-            (p for p in (base, base + ".inprogress") if os.path.exists(p)),
-            None,
-        )
-        if path is None:
-            return None
-        n_stages = n_jobs = 0
-        with open(path) as f:
-            for line in f:
-                if '"Event":"SparkListenerJobStart"' in line.replace(" ", ""):
-                    ev = json.loads(line)
-                    if window_ms[0] <= ev.get("Submission Time", 0) <= window_ms[1]:
-                        n_jobs += 1
-                        n_stages += len(ev.get("Stage Infos", []))
-        return n_stages, n_jobs
-    except Exception:
-        return None
-
-
 def main():
     import __spark_entry__ as entrymod
 
@@ -234,7 +196,6 @@ def main():
         # artifact, not the crawl's scaling behavior)
         web_dir = os.environ.get("SPARK_GRAFT_WEB_DIR") or ensure_bench_web(sf)
         timed_rounds = int(os.environ.get("SPARK_GRAFT_TIMED_ROUNDS", "3"))
-        t_wall0 = time.time()
         legs, t_total, urls_total = bench_crawl(
             spark, web_dir, warmup_rounds=2, timed_rounds=timed_rounds,
         )
@@ -249,17 +210,6 @@ def main():
             "timed_urls": urls_timed,
             "total_sec_incl_warmup": round(t_total, 3),
         }
-        if os.environ.get("SPARK_GRAFT_EVENTLOG") == "1":
-            # serial-barrier evidence: stages/jobs per steady round, parsed
-            # from the event log over the timed-round wall window
-            window = (
-                (t_wall0 + (t_total - t_timed)) * 1000,
-                (t_wall0 + t_total) * 1000,
-            )
-            counts = _eventlog_counts(spark, window)
-            if counts:
-                out["stages_per_round"] = round(counts[0] / timed_rounds, 1)
-                out["jobs_per_round"] = round(counts[1] / timed_rounds, 1)
         print(json.dumps(out))
         return
 

@@ -79,7 +79,7 @@ def main() -> int:
 
     rows: list[dict] = []
     for r in range(1, N_ROUNDS + 1):
-        pre_segs = len(sj._rt_segments())
+        pre_segs = len(sj._manifest()["segments"])
         rows.append({"round": r})
         t0 = time.time()
         job.run_one(r)

@@ -61,7 +61,6 @@ def run_at(cpus: int) -> dict:
         SPARK_GRAFT_SF_DIR=SF_DIR,
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_CRAWL_ONLY="1",
-        SPARK_GRAFT_EVENTLOG="1",  # stages/jobs-per-round evidence
         SPARK_GRAFT_BODY_WORDS=str(BODY_WORDS),
         # larger web than the per-round bench: the scaling criterion is
         # about steady-state parallel work, so give each round enough of it
@@ -422,8 +421,6 @@ def _publish(
         for c in (N_LOW, N_HIGH)
     }
     best_eff = (best[N_HIGH] / best[N_LOW]) / ratio
-    stage_counts = [r.get("stages_per_round") for r in runs if r.get("stages_per_round")]
-    job_counts = [r.get("jobs_per_round") for r in runs if r.get("jobs_per_round")]
     summary = {
         "metric": f"scaling_efficiency_{N_LOW}_to_{N_HIGH}",
         # HEADLINE: median of reversed-pair efficiencies — the estimator
@@ -441,10 +438,6 @@ def _publish(
         "body_words": BODY_WORDS,
         "web_pages": int(os.environ.get("SPARK_GRAFT_WEB_PAGES", "150000")),
         "pass_0_8": median_eff >= 0.8,
-        # serial-barrier evidence: stages and jobs per steady-state round,
-        # from the Spark event log (LOWER BOUND — tail may be unflushed)
-        "stages_per_round": min(stage_counts) if stage_counts else None,
-        "jobs_per_round": min(job_counts) if job_counts else None,
     }
     if pair_meta is not None:
         clean_effs = [m["efficiency"] for m in pair_meta if m["clean"]]

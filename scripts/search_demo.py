@@ -63,7 +63,10 @@ def main() -> int:
 
     for r in range(1, N_ROUNDS + 1):
         job.run_one(r)
-    check("realtime segments live", sorted(sj._rt_segments()) == [0, 1, 2])
+    check(
+        "realtime segments live",
+        sorted(sj._manifest()["segments"]) == [0, 1, 2],
+    )
 
     queries = [
         "search & engine",
@@ -109,7 +112,7 @@ def main() -> int:
     )
 
     sj.merge_realtime()
-    check("segments absorbed", sj._rt_segments() == [])
+    check("segments absorbed", sj._manifest()["segments"] == [])
     post = {
         q: {(r["doc"], r["score"]) for r in sj.search_query(q).collect()}
         for q in queries

@@ -126,11 +126,11 @@ def test_merge_realtime_absorbs_with_identical_results(rt_job, spark):
         for r in rt_job.search_zone_ranked(["spark", "rev1"], k=40).collect()
     ]
     rt_job.merge_realtime()
-    assert rt_job._rt_segments() == []
+    assert rt_job._manifest()["segments"] == []
     # absorbed dirs are RETAINED one absorb cycle for in-flight readers
     # (round-6 retention contract), listed for the next absorb's sweep —
-    # but no longer served (the segment pointer is empty)
-    assert set(rt_job._rt_pending_gc()) == {0, 1}
+    # but no longer served (the manifest's segment list is empty)
+    assert set(rt_job._manifest()["retained"]["segments"]) == {0, 1}
     rt_job.merge_realtime()  # no segments: just sweeps the retained dirs
     assert not os.path.isdir(
         os.path.join(rt_job.rt_dir, "seg_0")
@@ -173,7 +173,7 @@ def test_absorb_tokenizes_nothing_and_segments_keep_no_raw_rows(
     rt_job.add_realtime(spark.createDataFrame(
         [(3, "http://h1.test/p1", 1, "h1.test", 1, 404, None)], SCHEMA
     ))
-    for k in rt_job._rt_segments():
+    for k in rt_job._manifest()["segments"]:
         assert sorted(os.listdir(rt_job._seg_path(k))) == [
             "docs_meta", "gone", "postings", "zone"
         ]
@@ -200,7 +200,7 @@ def test_absorb_tokenizes_nothing_and_segments_keep_no_raw_rows(
         m.setattr(search_job_mod, "write_index_bucketed", tokenizer_called)
         m.setattr(postings_mod, "tokens_col", tokenizer_called)
         rt_job.merge_realtime()
-    assert rt_job._rt_segments() == []
+    assert rt_job._manifest()["segments"] == []
     assert replies() == pre
 
 
@@ -283,7 +283,7 @@ def test_realtime_only_serving_then_merge_builds_main(spark, tmp_path_factory):
     assert 10 in _docs(job.search_and(["alpha"]))
     assert 10 in _docs(job.search_zone_ranked(["alpha"]))
     job.merge_realtime()
-    assert job._rt_segments() == []
+    assert job._manifest()["segments"] == []
     assert job.index_path.endswith("postings_v0")
     assert 10 in _docs(job.search_and(["alpha"]))
 
@@ -326,7 +326,7 @@ def test_crawl_rounds_feed_realtime_search(
     job.ensure_init(spark.read.parquet(f"{tiny_web}/seeds.parquet"))
     for r in (1, 2):
         job.run_one(r)
-    assert sorted(sj._rt_segments()) == [0, 1]
+    assert sorted(sj._manifest()["segments"]) == [0, 1]
     terms = ["engine", "crawler"]
     pre = {
         (r["doc"], r["score"]) for r in sj.search_any(terms).collect()
@@ -392,7 +392,7 @@ def test_rt_max_segments_auto_merge(spark, tmp_path_factory):
             SCHEMA,
         ))
     # third append exceeded the cap → everything absorbed into main
-    assert job._rt_segments() == []
+    assert job._manifest()["segments"] == []
     for i in range(3):
         assert 900 + i in _docs(job.search_and([f"autoword{i}"]))
     assert 0 in _docs(job.search_and(["filler0"]))
@@ -495,21 +495,21 @@ def test_lifecycle_random_ops_match_dict_model(spark, tmp_path_factory):
 
 def test_realtime_crash_before_commit_is_invisible(rt_job, spark):
     """An uncommitted (crashed) segment directory is ignored by queries and
-    clobbered by the retry — the pointer file is the commit point."""
+    clobbered by the retry — the manifest is the commit point."""
     import shutil
 
     seg0 = rt_job._seg_path(0)
     os.makedirs(seg0, exist_ok=True)
     with open(os.path.join(seg0, "junk"), "w") as f:
         f.write("partial write")
-    assert rt_job._rt_segments() == []
+    assert rt_job._manifest()["segments"] == []
     assert 0 in _docs(rt_job.search_and(["filler0"]))  # serving unaffected
     # retry lands in seg_0 again (clobbering) and commits
     k = rt_job.add_realtime(spark.createDataFrame(
         [(2, "http://h9.test/new", 902, "h9.test", 1, 200, "crashproof")],
         SCHEMA,
     ))
-    assert k == 0 and rt_job._rt_segments() == [0]
+    assert k == 0 and rt_job._manifest()["segments"] == [0]
     assert not os.path.exists(os.path.join(seg0, "junk"))
     assert 902 in _docs(rt_job.search_and(["crashproof"]))
     shutil.rmtree(rt_job.root, ignore_errors=True)
@@ -535,7 +535,7 @@ def test_absorb_applies_delete_pass_without_main_index(spark, tmp_path_factory):
     pre = _docs(job.search_and(["spark"]))
     assert pre == {8}, "overlay must hide the 404'd doc pre-absorb"
     job.merge_realtime()
-    assert job._rt_segments() == []
+    assert job._manifest()["segments"] == []
     post = _docs(job.search_and(["spark"]))
     assert post == pre, "absorb resurrected a deleted doc"
     assert _docs(job.search_and(["zombie"])) == set()
@@ -561,46 +561,186 @@ def test_build_from_fetched_applies_delete_pass(spark, tmp_path_factory):
     assert _docs(job.search_and(["alpha"])) == set()
 
 
-def test_crash_between_segment_write_and_commit(spark, tmp_path_factory):
-    """Round-5 verdict next-round #8, crash injection on the pointer
-    protocol: a crash AFTER the segment directory is written but BEFORE
-    ``realtime.segments`` commits leaves an orphan directory. No reader
-    may ever see it, a re-append must clobber it, and the served results
-    must match the dict oracle of the committed appends only."""
-    job = SearchJob(
-        spark, str(tmp_path_factory.mktemp("rt_crash")), n_buckets=8
-    )
-    job.build_from_fetched(spark.createDataFrame(_base_rows(), SCHEMA))
-
-    delta = spark.createDataFrame(
-        [(2, "http://h9.test/new", 900, "h9.test", 1, 200,
+def _fresh_delta(spark, round_no=2):
+    return spark.createDataFrame(
+        [(round_no, "http://h9.test/new", 900, "h9.test", 1, 200,
           "freshword spark only")],
         SCHEMA,
     )
-    # crash injection: fail the append at the last step, INSIDE the
-    # protocol, by making the pointer commit raise
-    real_commit = job._rt_commit_segments
-    def boom(segs):
-        raise RuntimeError("injected crash before pointer commit")
-    job._rt_commit_segments = boom
-    with pytest.raises(RuntimeError, match="injected"):
-        job.add_realtime(delta)
-    job._rt_commit_segments = real_commit
 
-    # orphan directory exists, but no reader sees the half-segment
-    assert os.path.isdir(job._seg_path(0))
-    assert job._rt_segments() == []
-    assert _docs(job.search_and(["freshword"])) == set()
 
-    # the retry clobbers the orphan (same id reused — it was never
-    # committed) and serves exactly the committed state
-    k = job.add_realtime(delta)
-    assert k == 0
-    assert job._rt_segments() == [0]
+def _gen_and_seg_dirs(job):
+    gens = {d for d in os.listdir(job.root) if "_v" in d}
+    segs = set(os.listdir(job.rt_dir)) if os.path.isdir(job.rt_dir) else set()
+    return gens | {f"realtime/{s}" for s in segs}
+
+
+@pytest.mark.parametrize("mutation", ["append", "absorb", "merge_delta"])
+def test_crash_between_segment_write_and_commit(
+    mutation, spark, tmp_path_factory, monkeypatch
+):
+    """Round-5 verdict next-round #8, crash injection on the manifest
+    protocol: a mutation that dies AFTER writing its directories but AT the
+    manifest publish leaves the manifest and every reply unchanged — the
+    directories it wrote are unnamed, so no reader sees them — and the
+    retry succeeds (an append reuses the never-committed id) and serves
+    exactly the committed state. Every mutation commits with exactly one
+    os.replace: the manifest's."""
+    import aspseek_spark.plans.search_job as search_job_mod
+
+    job = SearchJob(
+        spark, str(tmp_path_factory.mktemp("rt_crash")), n_buckets=8,
+        rt_max_segments=None,
+    )
+    real_replace = os.replace
+
+    def one_commit(fn):
+        """``fn()``, asserting it made exactly one os.replace: the
+        manifest's."""
+        replaced = []
+
+        def counting_replace(src, dst):
+            replaced.append(dst)
+            real_replace(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", counting_replace)
+            out = fn()
+        assert replaced == [os.path.join(job.root, "manifest.json")]
+        return out
+
+    one_commit(lambda: job.build_from_fetched(
+        spark.createDataFrame(_base_rows(), SCHEMA)
+    ))
+    delta = _fresh_delta(spark)
+    if mutation == "absorb":
+        one_commit(lambda: job.add_realtime(delta))  # what it folds in
+    run = {
+        "append": lambda: job.add_realtime(delta),
+        "absorb": job.merge_realtime,
+        "merge_delta": lambda: job.merge_delta(delta),
+    }[mutation]
+
+    def replies():
+        return {
+            q: sorted(
+                (r["doc"], r["score"])
+                for r in job.search_query(q).collect()
+            )
+            for q in ("spark", "freshword")
+        }
+
+    manifest, pre = job._manifest(), replies()
+
+    def boom(path, doc):
+        raise RuntimeError("injected crash at the manifest publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(search_job_mod, "publish_manifest", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            run()
+    # the attempt's directories exist, but no reader sees them
+    written = job._seg_path(0) if mutation == "append" else os.path.join(
+        job.root, "postings_v1"
+    )
+    assert os.path.isdir(written)
+    assert job._manifest() == manifest
+    assert replies() == pre
+
+    k = one_commit(run)
+    if mutation == "append":
+        assert k == 0 and job._manifest()["segments"] == [0]
+    else:
+        assert job._manifest()["version"] == 1
+    # oracle: main docs + the one committed delta
     assert _docs(job.search_and(["freshword"])) == {900}
-    # oracle: main docs + the one committed append
-    want = {i for i in range(30)} | {900}
-    assert _docs(job.search_and(["spark"])) == want
+    assert _docs(job.search_and(["spark"])) == {i for i in range(30)} | {900}
+
+
+def test_crash_between_manifest_publish_and_sweep(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A process that dies after a flip's manifest publish but before its
+    sweep leaves the released directories on disk, unnamed; replies follow
+    the new manifest, and the next mutation sweeps them."""
+    job = SearchJob(
+        spark, str(tmp_path_factory.mktemp("rt_sweep")), n_buckets=8,
+        rt_max_segments=None,
+    )
+    job.build_from_fetched(spark.createDataFrame(_base_rows(), SCHEMA))
+    job.add_realtime(_fresh_delta(spark))
+    job.merge_realtime()  # v1 live; v0 and seg_0 retained
+    released = {"postings_v0", "zone_postings_v0", "docs_meta_v0",
+                "realtime/seg_0"}
+    assert released <= _gen_and_seg_dirs(job)
+
+    sweeps = []
+    real_sweep = job._sweep
+
+    def sweep_then_die(doc):
+        if sweeps:  # the mutation's second sweep: the one after publish
+            raise RuntimeError("injected crash before the sweep")
+        sweeps.append(doc)
+        real_sweep(doc)
+
+    monkeypatch.setattr(job, "_sweep", sweep_then_die)
+    gone = spark.createDataFrame(
+        [(3, "http://h1.test/p1", 1, "h1.test", 1, 404, None)], SCHEMA
+    )
+    with pytest.raises(RuntimeError, match="injected"):
+        job.merge_delta(gone)
+    monkeypatch.undo()
+    assert job._manifest()["version"] == 2
+    assert released <= _gen_and_seg_dirs(job)
+    assert _docs(job.search_and(["spark"])) == (
+        {i for i in range(30)} - {1}
+    ) | {900}
+
+    job.merge_delta(spark.createDataFrame(
+        [(4, "http://h9.test/n1", 901, "h9.test", 1, 200, "swept spark")],
+        SCHEMA,
+    ))
+    # v3 live, v2 retained; v1 released by this flip, v0 and seg_0 swept
+    assert _gen_and_seg_dirs(job) == {
+        f"{t}_v{v}" for t in ("postings", "zone_postings", "docs_meta")
+        for v in (2, 3)
+    }
+    assert _docs(job.search_and(["swept"])) == {901}
+
+
+def test_query_reads_one_manifest_snapshot(rt_job, spark, monkeypatch):
+    """A query resolves the manifest ONCE: an absorb that commits between
+    its main-index probe and its segment overlay must not tear the reply
+    (the old main generation with the segment list already cleared would
+    lose doc 900, which only the segment holds). Checked for a plain AND
+    and for a query-language reply that also reads the meta overlay."""
+    import aspseek_spark.plans.search_job as search_job_mod
+
+    real_probe = search_job_mod.probe_postings_bucketed
+    asks = [
+        lambda: rt_job.search_and(["spark"]),
+        lambda: rt_job.search_query("freshword & site:h9.test"),
+    ]
+    for i, ask in enumerate(asks):
+        rt_job.add_realtime(_fresh_delta(spark, round_no=2 + i))
+        want = sorted(tuple(r) for r in ask().collect())
+        assert 900 in {r[0] for r in want}
+        absorbed = []
+
+        def probe_then_absorb(*args, **kwargs):
+            if not absorbed:
+                absorbed.append(True)
+                rt_job.merge_realtime()
+            return real_probe(*args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(
+                search_job_mod, "probe_postings_bucketed", probe_then_absorb
+            )
+            got = sorted(tuple(r) for r in ask().collect())
+        assert absorbed
+        assert got == want
+        assert rt_job._manifest()["segments"] == []
 
 
 def test_deferred_absorb_and_segment_retention(spark, tmp_path_factory):
@@ -625,14 +765,14 @@ def test_deferred_absorb_and_segment_retention(spark, tmp_path_factory):
     assert job.add_realtime(delta(0), defer_merge=True) == 0
     assert job.add_realtime(delta(1), defer_merge=True) == 1
     # over the rt_max_segments=1 policy, but NOT absorbed (deferred)
-    assert job.needs_absorb() and job._rt_segments() == [0, 1]
+    assert job.needs_absorb() and job._manifest()["segments"] == [0, 1]
 
     pre = _docs(job.search_and(["spark"]))
     job.merge_realtime()
-    assert job._rt_segments() == [] and not job.needs_absorb()
+    assert job._manifest()["segments"] == [] and not job.needs_absorb()
     assert _docs(job.search_and(["spark"])) == pre
     # absorbed dirs RETAINED for in-flight readers, listed for gc
-    assert job._rt_pending_gc() == [0, 1]
+    assert job._manifest()["retained"]["segments"] == [0, 1]
     assert os.path.isdir(job._seg_path(0)) and os.path.isdir(job._seg_path(1))
 
     # ids of retained segments are not reused by the next append
@@ -641,7 +781,7 @@ def test_deferred_absorb_and_segment_retention(spark, tmp_path_factory):
     job.merge_realtime()
     assert not os.path.isdir(job._seg_path(0))
     assert not os.path.isdir(job._seg_path(1))
-    assert job._rt_pending_gc() == [2]
+    assert job._manifest()["retained"]["segments"] == [2]
     assert _docs(job.search_and(["deferword2"])) == {1002}
 
 
@@ -670,7 +810,7 @@ def test_crawl_background_absorb(spark, tiny_web, test_config,
     job.run(spark.read.parquet(f"{tiny_web}/seeds.parquet"), 3)
     # with rt_max_segments=1, rounds 1-3 triggered ≥1 background absorb
     assert absorbs, "absorb must have been submitted"
-    assert len(sj._rt_segments()) <= 2
+    assert len(sj._manifest()["segments"]) <= 2
     got = _docs(sj.search_and(["engine"]))
     # fresh full build over the same fetched history == served state
     fetched_all = None

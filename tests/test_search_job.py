@@ -486,7 +486,8 @@ def test_merge_swap_is_atomic(spark, fetched_fixture, tmp_path_factory):
         spark, str(tmp_path_factory.mktemp("atomic_idx")), n_buckets=16
     )
     job.build_from_fetched(fetched_fixture)
-    assert os.path.exists(job._ptr_path)
+    manifest = os.path.join(job.root, "manifest.json")
+    assert os.path.exists(manifest)
     v0_dir = job.index_path
     assert v0_dir.endswith("postings_v0")
 
@@ -495,7 +496,7 @@ def test_merge_swap_is_atomic(spark, fetched_fixture, tmp_path_factory):
     os.makedirs(half, exist_ok=True)
     with open(os.path.join(half, "junk.parquet"), "w") as f:
         f.write("partial write from a crashed merge attempt")
-    with open(job._ptr_path + ".tmp", "w") as f:
+    with open(manifest + ".tmp", "w") as f:
         f.write("99")
     # the pointer never flipped: reads still resolve v0 and work
     assert job.index_path == v0_dir
