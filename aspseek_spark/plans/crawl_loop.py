@@ -31,7 +31,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
@@ -191,16 +191,15 @@ class CrawlJob:
         if fmts["n"] > 0 and fmts["lo"] == BLOOM_FMT and fmts["hi"] == BLOOM_FMT:
             return
         empty = self.spark.createDataFrame([], BLOOM_SCHEMA)
-        rebuilt = bloom_add(
+        self.store.replace_probe(last, bloom_add(
             self.store.read_seen(last), empty, self.config
-        ).localCheckpoint()
-        rebuilt.write.mode("overwrite").parquet(self.store._p("bloom", last))
+        ).localCheckpoint())
 
     def _read_host_salts(self, round_id: int):
         """Adaptive-salt advisory state (host, salt) from ``round_id``'s
-        leftover backlog. ADVISORY, outside the snapshot commit on purpose:
-        a missing/stale file only means a host uses the default salt — the
-        schedule is salt-invariant, so correctness can't depend on it."""
+        leftover backlog, written in that round's commit. ADVISORY: a
+        missing file only means a host uses the default salt — the schedule
+        is salt-invariant, so correctness can't depend on it."""
         if not self.config.adaptive_salt:
             return None
         p = self.store._p("host_salts", round_id)
@@ -232,9 +231,9 @@ class CrawlJob:
             (r["host"], int(min(4096, math.ceil(r["count"] / target))))
             for r in hot
         ]
-        self.spark.createDataFrame(rows, "host string, salt int").write.mode(
-            "overwrite"
-        ).parquet(self.store._p("host_salts", round_id))
+        self.store.write_table("host_salts", round_id, self.spark.createDataFrame(
+            rows, "host string, salt int"
+        ))
 
     def run_one(self, round_id: int) -> dict:
         """Execute round ``round_id`` (state from round_id-1) and commit."""
@@ -258,17 +257,29 @@ class CrawlJob:
             if self.config.adaptive_salt and res.leftover is not None:
                 self._write_host_salts(round_id, res.leftover)
 
-        def _probe_metrics():
-            # distributed: per-blob fill ratios were computed next to the
-            # blobs by bloom_add; P-row scalar aggregate, no blob collect
+        def _metrics(probe) -> dict:
+            # inside write_round, before its commit: the probe metrics (a
+            # P-row scalar aggregate of the WRITTEN probe state) beside the
+            # frontier count (rides the cache its write job filled)
             if self.config.probe == "cuckoo":
-                row = (
-                    self.store.read_probe(round_id, self.config)
-                    .agg(F.sum("n_keys").alias("keys"))
-                    .collect()[0]
-                )
-                return 0.0, int(row["keys"] or 0)
-            return bloom_metrics(self.store.read_bloom(round_id))
+                f_probe = tasks.submit(lambda: (0.0, int(
+                    probe.agg(F.sum("n_keys")).collect()[0][0] or 0
+                )))
+            else:
+                f_probe = tasks.submit(bloom_metrics, probe)
+            frontier_size = res.frontier.count()
+            fill, bloom_keys = f_probe.result()
+            f_salts.result()  # the host salts commit with the round
+            return {
+                "round": round_id,
+                "urls_scheduled": res.n_sched,
+                "urls_fetched_ok": f_ok.result(),
+                "new_urls": n_new,
+                "frontier_size": frontier_size,
+                "bloom_fill": fill,
+                "bloom_keys": bloom_keys,
+                "elapsed_s": time.time() - t0,
+            }
 
         # Job structure (cuts the serial barrier floor ~2×):
         #   job A (inside run_round): the schedule checkpoint — frontier
@@ -283,9 +294,8 @@ class CrawlJob:
         #   then ALL snapshot writes run as concurrent jobs over cached data
         #     (the frontier write doubles as its materialization). n_ok and
         #     the adaptive-salt aggregate read only checkpointed outputs, so
-        #     they overlap the writes; the probe metrics (read the WRITTEN
-        #     bloom) and the frontier count (rides the cache its write job
-        #     fills) run after them, beside each other.
+        #     they overlap the writes; _metrics runs after them, and the
+        #     round commits once with its metrics row.
         with _RoundTasks(self, round_id) as tasks:
             res = run_round(
                 self.spark, round_id, self.config,
@@ -301,54 +311,15 @@ class CrawlJob:
                 fut.result()
             f_ok = tasks.submit(_n_ok)
             f_salts = tasks.submit(_salts)
-            self.store.write_round(
+            metrics = self.store.write_round(
                 round_id, self.config,
                 frontier=res.frontier,
                 bloom=res.bloom,
                 seen_delta=res.seen_delta,
                 robots_delta=res.robots_delta,
                 submit=tasks.submit,
+                metrics=_metrics,
             )
-            f_probe = tasks.submit(_probe_metrics)
-            frontier_size = res.frontier.count()  # cached by its write job
-            fill, bloom_keys = f_probe.result()
-            n_ok = f_ok.result()
-            f_salts.result()
-        elapsed = time.time() - t0
-        # partitioned-frontier write amplification evidence: bytes this
-        # round actually wrote vs the whole frontier's on-disk footprint
-        # (driver-side walk of the snapshot dirs — no Spark job)
-        fdir = self.store._frontier_round_dir(round_id)
-        written = 0
-        if os.path.isdir(fdir):
-            for dp, _dn, fn in os.walk(fdir):
-                written += sum(os.path.getsize(os.path.join(dp, f)) for f in fn)
-        total = 0
-        fmap = self.store.frontier_map(round_id) or {}
-        for v, ver in fmap.items():
-            pdir = os.path.join(
-                self.store._frontier_round_dir(ver), f"fpart={v}"
-            )
-            if os.path.isdir(pdir):
-                for dp, _dn, fn in os.walk(pdir):
-                    total += sum(
-                        os.path.getsize(os.path.join(dp, f)) for f in fn
-                    )
-        metrics = {
-            "round": round_id,
-            "urls_scheduled": res.n_sched,
-            "urls_fetched_ok": n_ok,
-            "new_urls": n_new,
-            "frontier_size": frontier_size,
-            "bloom_fill": fill,
-            "bloom_keys": bloom_keys,
-            "elapsed_s": elapsed,
-            "frontier_bytes_written": written,
-            "frontier_bytes_total": total,
-        }
-        self.store.write_table(
-            "metrics", round_id, self.spark.createDataFrame([Row(**metrics)])
-        )
         if self.realtime_index is not None:
             # a PREVIOUS background absorb that failed must fail the crawl
             # loudly, not rot silently

@@ -55,9 +55,7 @@ query-time scan actually partition-prunes.
 from __future__ import annotations
 
 import functools
-import glob
 import os
-import shutil
 import threading
 from collections import namedtuple
 from contextlib import contextmanager
@@ -89,7 +87,7 @@ from ..operators.postings import (
     write_index_bucketed,
     write_postings_bucketed,
 )
-from ..sources.manifest import publish_manifest, read_manifest
+from ..sources.manifest import publish_manifest, read_manifest, sweep
 
 # one stored table: main-generation directory base (``{main}_v{N}``),
 # segment sub-directory, read schema (with the partition column), row
@@ -313,12 +311,8 @@ class SearchJob:
             self._seg_path(k)
             for k in doc["segments"] + doc["retained"]["segments"]
         }
-        for path in [self._seg_path("*")] + [
-            self._gen_dir("*", t) for t in _TABLES
-        ]:
-            for found in glob.glob(path):
-                if found not in named:
-                    shutil.rmtree(found, ignore_errors=True)
+        sweep([self._seg_path("*")]
+              + [self._gen_dir("*", t) for t in _TABLES], named)
 
     def _flip(self, version: int, absorbed=()) -> None:
         """Commit ``version`` as the live generation, retaining the

@@ -4,38 +4,50 @@ The reference keeps all durable crawl state in transactional MySQL tables
 ([R:src/sqldb.cpp]); the north_star replaces them with Iceberg frontier /
 seen / fetched tables whose snapshots make a killed job resume with an
 identical frontier (BASELINE.json:6,14). This image has no Iceberg jars
-(SURVEY.md §7 hard-part 5), so snapshot isolation is emulated with the same
-commit protocol Iceberg uses underneath: write immutable data files, then
-atomically publish a manifest (sources/manifest.publish_manifest: one
-os.replace on manifest.json). A round is visible iff the manifest
-references it; partially-written rounds are invisible and simply
-overwritten on retry — combined with fully deterministic round logic this
-gives exactly-once-equivalent resume.
+(SURVEY.md §7 hard-part 5), so snapshot isolation is emulated with the
+commit protocol Iceberg uses underneath (sources/manifest.py).
+
+ONE commit per mutation: ``manifest.json`` names every directory a reader
+may open. A round (write_round, round 0 included), delete_urls and a probe
+rebuild (replace_probe) each write only directories it does not name — a
+rewrite goes to a fresh ``{table}_v{gen}`` — then publish the next
+manifest (one os.replace), then sweep what neither it nor its retained
+previous round names. A failure before the publish leaves the previous
+commit whole; with deterministic round logic, resume is exactly-once
+equivalent. The manifest names, for the last and the retained previous
+round, the frontier's generation dir and fpart → owning-round map and the
+probe-state dir; every seen-delta dir; the live bucketed-seen generation
+and its bucket count; and ``gen``, the newest rewrite generation. Round
+tables are named by round ≤ last_round, host salts by the retained rounds.
 
 Table layouts (all parquet, explicit schemas — FIXTURES.md):
 
-  frontier_rounds/round=N/fpart=V/
+  frontier_rounds[_vG]/round=N/fpart=V/
                         PARTITIONED frontier: fpart is a due-time bucket
                         (next_fetch_unix // (interval·frontier_part_rounds)).
                         A round writes ONLY the partitions it touched (due +
-                        new + revisit); untouched partitions keep their
-                        existing version dirs byte-identical. The manifest
-                        maps fpart → owning round per committed round —
-                        exactly Iceberg's partition-overwrite snapshot model.
-  bloom/round=N/        snapshot per round (P blob rows; tiny)
-  seen_delta/round=N/   append-only — only NEW urls each round, so per-round
+                        new + revisit) into its predecessor's generation;
+                        untouched partitions keep their existing version
+                        dirs byte-identical — exactly Iceberg's
+                        partition-overwrite snapshot model.
+  bloom[_vG]/round=N/   probe state per round: P bloom blob rows (about
+                        12 GB of bits at 10^10 keys — operators/seen.py)
+                        or cuckoo tables
+  seen_delta[_vG]/round=N/
+                        append-only — only NEW urls each round, so per-round
                         write cost is O(new), not O(total); the logical
-                        ``seen`` table is the union of deltas 0..N (at real
-                        scale: an Iceberg append per round)
-  seen_bucketed/        catalog table BUCKETED by url_canon (J1 scale path):
-                        each committed delta is appended bucket-aligned so
-                        the exact backstop is a bucket-local join — the seen
-                        side never shuffles, never broadcasts. Derived from
-                        the deltas (membership-only consumer, so replayed
-                        appends are harmless); rebuilt after deletions.
+                        ``seen`` table is the union of the named deltas
+  seen_bucketed[_vG]/   catalog table BUCKETED by url_canon (J1 scale path):
+                        each round's delta is appended bucket-aligned so the
+                        exact backstop is a bucket-local join — the seen
+                        side never shuffles, never broadcasts. Deletions and
+                        a bucket-count change rewrite it under a fresh
+                        catalog name.
   robots_delta/round=N/ append-only robots-cache additions
   fetched/round=N/      append-only crawl output (+ extracted text)
-  metrics/round=N/      append-only per-round lineage + metrics [B:14]
+  links/round=N/        append-only link graph
+  metrics/round=N/      per-round lineage + metrics [B:14]
+  host_salts/round=N/   advisory adaptive-salt overrides (plans/crawl_loop)
 """
 
 from __future__ import annotations
@@ -43,14 +55,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CrawlConfig
-from .manifest import publish_manifest, read_manifest
+from .manifest import publish_manifest, read_manifest, sweep
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -111,8 +122,23 @@ def probe_state_schema(config: CrawlConfig) -> T.StructType:
     return CUCKOO_SCHEMA if config.probe == "cuckoo" else BLOOM_SCHEMA
 
 
+# every directory a mutation writes (relative to the store root): what a
+# commit's sweep may release
+_SWEPT = [
+    f"{t}{sub}"
+    for t in ("frontier_rounds", "bloom", "seen_delta", "seen_bucketed",
+              "robots_delta", "fetched", "links", "metrics", "host_salts")
+    for sub in ("*", "*/round=*", "*/round=*/fpart=*")
+]
+
+
+def _gen_dir(table: str, gen: int) -> str:
+    return table if gen == 0 else f"{table}_v{gen}"
+
+
 class StateStore:
-    """Directory-backed snapshot store with atomic manifest publish."""
+    """Directory-backed snapshot store: one manifest, one commit per
+    mutation (see the module doc)."""
 
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
@@ -124,53 +150,81 @@ class StateStore:
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "manifest.json")
 
+    def _doc(self) -> dict | None:
+        return read_manifest(self._manifest_path)
+
     def last_committed_round(self) -> int | None:
-        doc = read_manifest(self._manifest_path)
+        doc = self._doc()
         return None if doc is None else doc["last_round"]
 
-    def _publish(
-        self,
-        round_id: int,
-        config: CrawlConfig,
-        frontier_maps: dict[int, dict[int, int]] | None = None,
-    ) -> None:
-        doc: dict = {
-            "last_round": round_id,
-            "config": json.loads(config.to_json()),
-        }
-        if frontier_maps is not None:
-            doc["frontier_maps"] = {
-                str(r): {str(v): ver for v, ver in m.items()}
-                for r, m in frontier_maps.items()
-            }
-        publish_manifest(self._manifest_path, doc)  # the commit point
+    def _round(self, round_id: int, what: str) -> dict:
+        """The snapshot of ``round_id``: the live or the retained round."""
+        entry = (self._doc() or {"rounds": {}})["rounds"].get(str(round_id))
+        if entry is None:
+            raise FileNotFoundError(
+                f"no committed {what} for round {round_id} in {self.root} "
+                f"(the manifest keeps the last two rounds)"
+            )
+        return entry
+
+    def _named(self, doc: dict) -> set[str]:
+        """Every directory ``doc`` names, with its parents."""
+        rel = [*doc["seen"].values(),
+               _gen_dir("seen_bucketed", doc["seen_bucketed"]["v"])]
+        for r, entry in doc["rounds"].items():
+            rel += [entry["bloom"], f"host_salts/round={r}"] + [
+                f"{entry['frontier']}/round={ver}/fpart={v}"
+                for v, ver in entry["fparts"].items()
+            ]
+        rel += [f"{t}/round={r}" for r in range(doc["last_round"] + 1)
+                for t in ("robots_delta", "fetched", "links", "metrics")]
+        named = set()
+        for p in rel:
+            while p:
+                named.add(os.path.join(self.root, p))
+                p = os.path.dirname(p)
+        return named
+
+    def _commit(self, doc: dict, prev: dict | None) -> None:
+        """Publish ``doc`` (the commit point), then release what only
+        ``prev`` named: a bucketed catalog entry, and every directory."""
+        publish_manifest(self._manifest_path, doc)
+        old = (prev or {}).get("seen_bucketed")
+        if old is not None and old["v"] != doc["seen_bucketed"]["v"]:
+            self.spark.sql(f"DROP TABLE IF EXISTS {self._bkt_name(old['v'])}")
+        sweep([os.path.join(self.root, p) for p in _SWEPT], self._named(doc))
 
     # -- paths --------------------------------------------------------------
     def _p(self, table: str, round_id: int) -> str:
         return os.path.join(self.root, table, f"round={round_id}")
 
     def write_table(self, name: str, round_id: int, df) -> None:
-        """One plain snapshot-table write. The fetched/links writes run
-        before write_round, during the seen/new-urls phase
-        (plans/crawl_round). Running pre-publish is safe for the same
-        reason the chained bucketed-seen append is: round logic is
-        deterministic (a crashed-then-retried round re-derives and
-        overwrites the same delta) and every reader gates on the committed
-        manifest, so files from an uncommitted attempt are invisible."""
+        """One round-table write into ``name/round=N``, which no commit
+        names until round N commits. The fetched/links writes run before
+        write_round, during the seen/new-urls phase (plans/crawl_round); a
+        retried round re-derives and overwrites the same rows (round logic
+        is deterministic)."""
         df.write.mode("overwrite").parquet(self._p(name, round_id))
 
+    def _write_fresh(self, table: str, gen: int, round_id: int, df) -> str:
+        """Write a rewrite of round ``round_id``'s ``table`` into generation
+        ``gen``, which no commit names yet; return its relative path."""
+        rel = f"{_gen_dir(table, gen)}/round={round_id}"
+        df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        return rel
+
     # -- partitioned frontier (SNK1: rounds rewrite only touched fparts) -----
-    def _frontier_round_dir(self, round_id: int) -> str:
-        return os.path.join(self.root, "frontier_rounds", f"round={round_id}")
+    def _frontier_round_dir(
+        self, round_id: int, gen_dir: str = "frontier_rounds"
+    ) -> str:
+        return os.path.join(self.root, gen_dir, f"round={round_id}")
 
     def frontier_map(self, round_id: int) -> dict[int, int] | None:
         """fpart → owning-round map for ``round_id``; None when the
         manifest retains no map for that round (not committed, or older
         than the two-round resume window)."""
-        maps = (read_manifest(self._manifest_path) or {}).get("frontier_maps")
-        if maps is None or str(round_id) not in maps:
-            return None
-        return {int(v): int(ver) for v, ver in maps[str(round_id)].items()}
+        entry = (self._doc() or {"rounds": {}})["rounds"].get(str(round_id))
+        return entry and {int(v): int(r) for v, r in entry["fparts"].items()}
 
     @staticmethod
     def _fpart_granularity(config: CrawlConfig) -> int:
@@ -207,255 +261,232 @@ class StateStore:
         touched.update(range(rv_lo, rv_hi + 1))
         return touched
 
-    def _write_frontier_partitioned(
-        self, round_id: int, config: CrawlConfig, frontier: DataFrame
-    ) -> dict[int, int]:
-        """Write ONLY the touched partitions' rows under this round's dir;
-        return the new fpart → owning-round map. Rows in untouched
-        partitions are not written — their existing version dirs stay
-        referenced by the returned map (and physically untouched)."""
-        prev_map = self.frontier_map(round_id - 1) or {}
-        touched = self._touched_fparts(round_id, config, prev_map)
-        g = self._fpart_granularity(config)
-        out_dir = self._frontier_round_dir(round_id)
-        (
-            frontier.withColumn(
-                "fpart",
-                F.floor(F.col("next_fetch_unix") / F.lit(g)).cast("long"),
-            )
-            .filter(F.col("fpart").isin([int(v) for v in touched]))
-            # r07 (guide §6 small files): cluster by the partition column so
-            # each touched fpart lands in ~ONE file instead of one file per
-            # (writer task × fpart). Without this, every round emitted up to
-            # shuffle.partitions files per fpart, and the NEXT round's two
-            # full-frontier scans (the due scan and the not_due rewrite
-            # branch) paid listing + footer + open cost for hundreds of
-            # KB-sized files. The extra exchange moves only the touched
-            # rows (slim columns, no page bodies).
-            .repartition("fpart")
-            .write.mode("overwrite")
-            .partitionBy("fpart")
-            .parquet(out_dir)
+    def _write_fparts(
+        self, frontier: DataFrame, out_dir: str, config: CrawlConfig,
+        only: set[int] | None = None,
+    ) -> set[int]:
+        """Write ``frontier`` partitioned by fpart (only the ``only``
+        partitions' rows, when given) under ``out_dir``; return the
+        partitions written."""
+        df = frontier.withColumn(
+            "fpart",
+            F.floor(
+                F.col("next_fetch_unix") / F.lit(self._fpart_granularity(config))
+            ).cast("long"),
         )
-        present = {
+        if only is not None:
+            df = df.filter(F.col("fpart").isin([int(v) for v in only]))
+        # r07 (guide §6 small files): cluster by the partition column so
+        # each fpart lands in ~ONE file, not one per (writer task × fpart);
+        # the exchange moves only the written rows (slim columns)
+        df.repartition("fpart").write.mode("overwrite").partitionBy(
+            "fpart"
+        ).parquet(out_dir)
+        return {
             int(d.split("=", 1)[1])
             for d in os.listdir(out_dir)
             if d.startswith("fpart=")
         }
-        new_map = {v: r for v, r in prev_map.items() if v not in touched}
-        new_map.update({v: round_id for v in present})
-        return new_map
 
-    def _gc_frontier_versions(self, kept_maps: dict[int, dict[int, int]]) -> None:
-        """Remove version dirs no committed map references (Iceberg:
-        expire_snapshots). Untouched partitions keep old round dirs alive
-        for as long as a kept map points at them."""
-        base = os.path.join(self.root, "frontier_rounds")
-        if not os.path.isdir(base):
-            return
-        newest = max(kept_maps) if kept_maps else -1
-        referenced = {
-            (ver, v) for m in kept_maps.values() for v, ver in m.items()
+    def _frontier_bytes(self, round_id: int, entry: dict) -> dict[str, int]:
+        """Partitioned-frontier write amplification evidence: the bytes
+        round ``round_id`` wrote vs the whole frontier's on-disk footprint
+        (driver-side walk of the version dirs — no Spark job)."""
+        def size(ver: int, fpart: str = "") -> int:
+            d = os.path.join(self._frontier_round_dir(ver, entry["frontier"]), fpart)
+            return sum(os.path.getsize(os.path.join(dp, f))
+                       for dp, _dn, fns in os.walk(d) for f in fns)
+
+        return {
+            "frontier_bytes_written": size(round_id),
+            "frontier_bytes_total": sum(
+                size(ver, f"fpart={v}") for v, ver in entry["fparts"].items()
+            ),
         }
-        for rd in os.listdir(base):
-            if not rd.startswith("round="):
-                continue
-            r = int(rd.split("=", 1)[1])
-            if r >= newest:
-                # never GC inside the newest commit (or a concurrent writer)
-                continue
-            rdir = os.path.join(base, rd)
-            for pd in os.listdir(rdir):
-                if pd.startswith("fpart="):
-                    v = int(pd.split("=", 1)[1])
-                    if (r, v) not in referenced:
-                        shutil.rmtree(os.path.join(rdir, pd))
-            if not any(p.startswith("fpart=") for p in os.listdir(rdir)):
-                shutil.rmtree(rdir)
 
     # -- bucketed seen (J1 exact-backstop scale path) -------------------------
+    def _bkt_name(self, v: int) -> str:
+        digest = hashlib.md5(self.root.encode()).hexdigest()[:10]
+        return _gen_dir(f"seen_bkt_{digest}", v)
+
+    def _bkt_path(self, v: int) -> str:
+        return os.path.join(self.root, _gen_dir("seen_bucketed", v))
+
     @property
     def _seen_bkt_name(self) -> str:
-        digest = hashlib.md5(self.root.encode()).hexdigest()[:10]
-        return f"seen_bkt_{digest}"
+        return self._bkt_name(self._doc()["seen_bucketed"]["v"])
 
     @property
     def _seen_bkt_path(self) -> str:
-        return os.path.join(self.root, "seen_bucketed")
+        return self._bkt_path(self._doc()["seen_bucketed"]["v"])
 
-    @property
-    def _seen_bkt_marker(self) -> str:
-        return os.path.join(self.root, "seen_bucketed.json")
+    def _write_seen_bucketed(self, rows: DataFrame, bkt: dict, mode: str):
+        """Append ``rows`` to generation ``bkt``, or ("overwrite") make
+        them its whole content. Repartitioning by the bucket column first
+        gives each task exactly one bucket: ONE file per bucket."""
+        n = bkt["buckets"]
+        (
+            rows.repartition(n, "url_canon")
+            .write.mode(mode)
+            .format("parquet")
+            .bucketBy(n, "url_canon")
+            .sortBy("url_canon")
+            .option("path", self._bkt_path(bkt["v"]))
+            .saveAsTable(self._bkt_name(bkt["v"]))
+        )
 
-    def _sync_seen_bucketed(self, upto_round: int, config: CrawlConfig) -> None:
-        """Append committed seen deltas (marker+1 .. upto_round) into the
-        bucketed table. Idempotence note: the bucketed table is consumed for
-        MEMBERSHIP only (left_anti backstop), so a crash-replayed append can
-        only duplicate rows of its own delta — the membership set is
-        unchanged. The committed delta files are always the source of truth.
-        """
-        empty = {"upto_round": -1, "buckets": config.seen_buckets}
-        marker = read_manifest(self._seen_bkt_marker) or empty
-        if marker["buckets"] != config.seen_buckets:
-            # bucket-count drift: rebuild from scratch
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_bkt_name}")
-            shutil.rmtree(self._seen_bkt_path, ignore_errors=True)
-            marker = empty
-        if (
-            marker["upto_round"] >= 0
-            and not self.spark.catalog.tableExists(self._seen_bkt_name)
-        ):
-            if not os.path.isdir(self._seen_bkt_path):
-                # files gone (fresh root reusing a role) — rebuild
-                marker = empty
-            else:
-                # Files present + marker current, but the saveAsTable entry
-                # lives in the SESSION's in-memory catalog — a resume in a
-                # NEW Spark process would otherwise hit
-                # TABLE_OR_VIEW_NOT_FOUND (round-3 ADVICE, high). Re-register
-                # the external bucketed table over the existing files; the
-                # bucket spec must match the writer's exactly or the
-                # bucket-local join plan (explain check 10) silently degrades.
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in SEEN_SCHEMA.fields
-                )
-                self.spark.sql(
-                    f"CREATE TABLE {self._seen_bkt_name} ({cols}) "
-                    f"USING parquet "
-                    f"CLUSTERED BY (url_canon) SORTED BY (url_canon) "
-                    f"INTO {config.seen_buckets} BUCKETS "
-                    f"LOCATION '{self._seen_bkt_path}'"
-                )
-        done = marker["upto_round"]
-        for r in range(done + 1, upto_round + 1):
-            p = self._p("seen_delta", r)
-            if not os.path.exists(p):
-                continue
-            delta = self.spark.read.schema(SEEN_SCHEMA).parquet(p)
-            (
-                # repartition by the bucket column first: HashPartitioning
-                # matches the bucket hash, so each task owns exactly one
-                # bucket and the append emits ONE file per bucket per round
-                delta.repartition(config.seen_buckets, "url_canon")
-                .write.mode("append")
-                .format("parquet")
-                .bucketBy(config.seen_buckets, "url_canon")
-                .sortBy("url_canon")
-                .option("path", self._seen_bkt_path)
-                .saveAsTable(self._seen_bkt_name)
+    def _register_seen_bucketed(self, bkt: dict) -> str:
+        """The catalog name of generation ``bkt``, registered over its
+        files when the session's catalog lacks it (a resume in a NEW Spark
+        process — round-3 ADVICE, high) with the writer's exact bucket spec,
+        or the bucket-local join plan (explain check 10) silently degrades."""
+        name = self._bkt_name(bkt["v"])
+        if not self.spark.catalog.tableExists(name):
+            cols = ", ".join(
+                f"{f.name} {f.dataType.simpleString()}"
+                for f in SEEN_SCHEMA.fields
             )
-        marker["upto_round"] = max(done, upto_round)
-        publish_manifest(self._seen_bkt_marker, marker)
+            self.spark.sql(
+                f"CREATE TABLE {name} ({cols}) "
+                f"USING parquet "
+                f"CLUSTERED BY (url_canon) SORTED BY (url_canon) "
+                f"INTO {bkt['buckets']} BUCKETS "
+                f"LOCATION '{self._bkt_path(bkt['v'])}'"
+            )
+        return name
 
     def read_seen_bucketed(self, upto_round: int, config: CrawlConfig) -> DataFrame:
         """The seen set as a BUCKETED table (url_canon buckets): joining on
         url_canon against this side plans bucket-locally — no Exchange above
         the seen scan, nothing broadcast (scripts/explain_plans.py check 10).
-        Catches up any deltas committed after the last sync (crash window)."""
-        self._sync_seen_bucketed(upto_round, config)
-        return self.spark.table(self._seen_bkt_name).filter(
+        The table keeps the bucket count it was committed with; the next
+        write_round or delete_urls rewrites it at ``config.seen_buckets``."""
+        name = self._register_seen_bucketed(self._doc()["seen_bucketed"])
+        return self.spark.table(name).filter(
             F.col("round_added") <= F.lit(upto_round)
         )
 
-    def _rebuild_seen_bucketed(self, upto_round: int, config: CrawlConfig) -> None:
-        """Drop + resync (after deletions: the bucketed table must forget)."""
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_bkt_name}")
-        shutil.rmtree(self._seen_bkt_path, ignore_errors=True)
-        if os.path.exists(self._seen_bkt_marker):
-            os.remove(self._seen_bkt_marker)
-        self._sync_seen_bucketed(upto_round, config)
-
-    # -- writes (invisible until _publish) -----------------------------------
+    # -- mutations (each ends in one _commit) --------------------------------
     def write_round(
-        self,
-        round_id: int,
-        config: CrawlConfig,
-        frontier: DataFrame,
-        bloom: DataFrame,
-        seen_delta: DataFrame,
-        robots_delta: DataFrame,
-        *,
-        submit,
-    ) -> None:
-        """Write round ``round_id``'s snapshot tables, then publish it.
-        (The round's fetched and links tables are written before this, by
-        plans/crawl_round; its metrics row after, by plans/crawl_loop.)
-
-        The tables are independent once the shared upstream lineage is
-        materialized (the caller persists + counts it first), so their
-        write jobs run CONCURRENTLY through ``submit(fn, *args) -> Future``
-        on the caller's executor — overlapping the per-job fixed latencies
-        cuts the serial floor of a round by ~3×. The manifest publish (the
-        commit point) happens strictly after every write; a failed write
-        raises before it, and the caller waits for the writes still
-        running."""
-        new_map: dict[int, int] = {}
+        self, round_id: int, config: CrawlConfig, frontier: DataFrame,
+        bloom: DataFrame, seen_delta: DataFrame, robots_delta: DataFrame,
+        *, submit, metrics=None,
+    ) -> dict | None:
+        """Write round ``round_id``'s snapshot tables (its fetched and links
+        tables precede this — plans/crawl_round), then commit it. The
+        writes run CONCURRENTLY through ``submit(fn, *args) -> Future`` over
+        the caller's materialized lineage (~3× off a round's serial floor).
+        ``metrics(probe)`` gets the written probe state and returns the
+        metrics row, committed with the frontier byte counts and returned."""
+        prev = self._doc()
+        base = prev or {"gen": 0, "rounds": {}, "seen": {}}
+        gen = base["gen"]
+        last = base["rounds"].get(str(round_id - 1))
+        entry = {
+            # a map's fpart versions all live in one generation dir
+            "frontier": last["frontier"] if last else "frontier_rounds",
+            "fparts": {},
+            "bloom": f"bloom/round={round_id}",
+        }
+        bkt = base.get("seen_bucketed")
+        append = bkt is not None and bkt["buckets"] == config.seen_buckets
+        if not append:
+            # first round or a bucket-count change: a fresh generation
+            gen += int(bkt is not None)
+            bkt = {"v": gen, "buckets": config.seen_buckets}
+        seen = {**base["seen"], str(round_id): f"seen_delta/round={round_id}"}
 
         def _write(name: str, df: DataFrame) -> None:
             if name == "frontier":
                 # partitioned write: only touched fparts (see module doc)
-                new_map.update(
-                    self._write_frontier_partitioned(round_id, config, df)
-                )
+                fparts = {
+                    int(v): r for v, r in (last["fparts"] if last else {}).items()
+                }
+                touched = self._touched_fparts(round_id, config, fparts)
+                fparts = {v: r for v, r in fparts.items() if v not in touched}
+                fparts.update(dict.fromkeys(self._write_fparts(
+                    df, self._frontier_round_dir(round_id, entry["frontier"]),
+                    config, only=touched,
+                ), round_id))
+                entry["fparts"] = {str(v): r for v, r in sorted(fparts.items())}
                 return
             self.write_table(name, round_id, df)
             if name == "seen_delta":
-                # chain the bucketed-backstop append onto the delta write,
+                # chain the bucketed-backstop write onto the delta write,
                 # in the same task so its latency overlaps the other table
-                # writes. Running it pre-publish is safe: round logic is
-                # deterministic (a retried round re-derives the same delta),
-                # the table is consumed membership-only, and every read
-                # filters round_added <= last-committed — rows from a
-                # crashed-then-retried attempt are invisible until the
-                # round actually commits, and the marker stops them from
-                # being appended twice.
-                self._sync_seen_bucketed(round_id, config)
+                # writes. Appending before the commit is harmless: readers
+                # filter round_added ≤ a committed round, so a crashed
+                # attempt's rows stay hidden and a replay only duplicates
+                # them (the table is consumed membership-only).
+                paths = [self._p("seen_delta", round_id)] if append else [
+                    os.path.join(self.root, p) for p in seen.values()
+                ]
+                self._write_seen_bucketed(
+                    self.spark.read.schema(SEEN_SCHEMA).parquet(*paths), bkt,
+                    "append" if append else "overwrite",
+                )
 
-        tables = (
-            ("frontier", frontier),
-            ("bloom", bloom),
-            ("seen_delta", seen_delta),
-            ("robots_delta", robots_delta),
-        )
-        for fut in [submit(_write, name, df) for name, df in tables]:
+        tables = {"frontier": frontier, "bloom": bloom,
+                  "seen_delta": seen_delta, "robots_delta": robots_delta}
+        for fut in [submit(_write, name, df) for name, df in tables.items()]:
             fut.result()
 
-        # keep the previous round's map for time travel (resume window = 2)
-        kept_maps = {round_id: new_map}
-        prev_map = self.frontier_map(round_id - 1)
-        if prev_map is not None:
-            kept_maps[round_id - 1] = prev_map
-        self._publish(round_id, config, frontier_maps=kept_maps)
-        # (bucketed-seen sync already ran chained on the seen_delta write;
-        # a crash anywhere is healed by read_seen_bucketed's marker-driven
-        # catch-up)
-        # snapshot GC (Iceberg: expire_snapshots): unreferenced frontier
-        # version dirs + all-but-last-2 bloom snapshots
-        self._gc_frontier_versions(kept_maps)
-        for old in range(round_id - 2, -1, -1):
-            path = self._p("bloom", old)
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            else:
-                break
+        row = None
+        if metrics is not None:
+            row = {
+                **metrics(self._read_probe_dir(entry["bloom"], config)),
+                **self._frontier_bytes(round_id, entry),
+            }
+            self.write_table(
+                "metrics", round_id, self.spark.createDataFrame([Row(**row)])
+            )
+        rounds = {str(round_id): entry}
+        if last is not None:
+            # the previous round stays readable (resume window = 2)
+            rounds[str(round_id - 1)] = last
+        self._commit({
+            "last_round": round_id,
+            "config": json.loads(config.to_json()),
+            "gen": gen,
+            "rounds": rounds,
+            "seen": seen,
+            "seen_bucketed": bkt,
+        }, prev)
+        return row
+
+    def replace_probe(self, round_id: int, probe: DataFrame) -> None:
+        """Commit ``probe`` as round ``round_id``'s probe state (a rebuild
+        under a new hash family)."""
+        prev = self._doc()
+        gen = prev["gen"] + 1
+        entry = {
+            **prev["rounds"][str(round_id)],
+            "bloom": self._write_fresh("bloom", gen, round_id, probe),
+        }
+        self._commit({
+            **prev, "gen": gen,
+            "rounds": {**prev["rounds"], str(round_id): entry},
+        }, prev)
 
     def delete_urls(self, round_id: int, urls: list[str], config) -> None:
         """URL expiry / tag deletion (north_star cuckoo-deletion use case;
-        reference: DELETE from urlword): remove ``urls`` from the committed
-        seen set, frontier, and probe-filter state at ``round_id`` so the
-        crawl can re-discover and re-fetch them.
-
-        Mechanics: the seen deltas up to round_id are consolidated (minus
-        deletions) into round_id's delta and older delta dirs removed; the
-        frontier snapshot is rewritten without the urls; the bloom blobs of
-        ONLY the touched pids are rebuilt from the surviving seen rows
-        (operators/seen.seen_delete) — bounded work. Deployments with
-        frequent deletion swap the bloom for operators/cuckoo_seen (true
-        O(1) deletes, no rebuild).
+        reference: DELETE from urlword): remove ``urls`` from the seen set,
+        frontier, probe state and bucketed backstop of ``round_id``, the
+        last committed round, in one commit, so the crawl can re-discover
+        and re-fetch them. The surviving seen rows become one delta and the
+        bucketed table; the frontier becomes one full version; the bloom
+        rebuilds ONLY the touched pids' blobs (operators/seen.seen_delete)
+        and the cuckoo deletes in place (operators/cuckoo_seen). Every
+        rewrite goes to a fresh generation.
         """
+        from ..operators.cuckoo_seen import cuckoo_delete
         from ..operators.seen import seen_delete
 
+        prev = self._doc()
+        if prev is None or prev["last_round"] != round_id:
+            raise ValueError(
+                f"delete_urls rewrites the last committed round, not {round_id}"
+            )
         deletes = self.spark.createDataFrame(
             [(u,) for u in urls], "url_canon string"
         )
@@ -465,78 +496,58 @@ class StateStore:
         new_frontier = self.read_frontier(round_id).join(
             deletes, "url_canon", "left_anti"
         ).localCheckpoint()
-        if getattr(config, "probe", "bloom") == "cuckoo":
-            # cuckoo path: true O(1) deletion, no blob rebuild
-            from ..operators.cuckoo_seen import cuckoo_delete
+        probe = self.read_probe(round_id, config)
+        new_bloom = (
+            cuckoo_delete(deletes, probe, config) if config.probe == "cuckoo"
+            else seen_delete(new_seen, probe, deletes, config)
+        ).localCheckpoint()
 
-            new_bloom = cuckoo_delete(
-                deletes, self.read_probe(round_id, config), config
-            ).localCheckpoint()
-        else:
-            new_bloom = seen_delete(
-                new_seen, self.read_bloom(round_id), deletes, config
-            ).localCheckpoint()
-        new_seen.write.mode("overwrite").parquet(
-            self._p("seen_delta", round_id)
+        gen = prev["gen"] + 1
+        seen = {str(round_id): self._write_fresh(
+            "seen_delta", gen, round_id, new_seen
+        )}
+        # deletions are rare (tag expiry): rewrite ALL partitions
+        gen_dir = _gen_dir("frontier_rounds", gen)
+        present = self._write_fparts(
+            new_frontier, self._frontier_round_dir(round_id, gen_dir), config
         )
-        for r in range(round_id):
-            p = self._p("seen_delta", r)
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        # deletions are rare (tag expiry): rewrite ALL partitions as a
-        # fresh full version of round_id and republish the map
-        g = self._fpart_granularity(config)
-        out_dir = self._frontier_round_dir(round_id)
-        (
-            new_frontier.withColumn(
-                "fpart",
-                F.floor(F.col("next_fetch_unix") / F.lit(g)).cast("long"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("fpart")
-            .parquet(out_dir)
-        )
-        fmap = {
-            int(d.split("=", 1)[1]): round_id
-            for d in os.listdir(out_dir)
-            if d.startswith("fpart=")
+        entry = {
+            "frontier": gen_dir,
+            "fparts": {str(v): round_id for v in sorted(present)},
+            "bloom": self._write_fresh("bloom", gen, round_id, new_bloom),
         }
-        kept = {round_id: fmap}
-        prev = self.frontier_map(round_id - 1)
-        if prev is not None:
-            kept[round_id - 1] = prev
-        self._publish(round_id, config, frontier_maps=kept)
-        self._gc_frontier_versions(kept)
-        new_bloom.write.mode("overwrite").parquet(self._p("bloom", round_id))
-        # the bucketed backstop table must forget the deleted urls too
-        self._rebuild_seen_bucketed(round_id, config)
+        bkt = {"v": gen, "buckets": config.seen_buckets}
+        self._write_seen_bucketed(new_seen, bkt, "overwrite")
+        self._commit({
+            **prev, "gen": gen, "seen": seen, "seen_bucketed": bkt,
+            "rounds": {**prev["rounds"], str(round_id): entry},
+        }, prev)
 
     # -- reads (only committed rounds) ---------------------------------------
     def read_frontier(self, round_id: int) -> DataFrame:
-        fmap = self.frontier_map(round_id)
-        if fmap is None:
-            raise FileNotFoundError(
-                f"no committed frontier for round {round_id} in "
-                f"{self.root} (the manifest keeps the last two rounds)"
-            )
-        if not fmap:
+        entry = self._round(round_id, "frontier")
+        if not entry["fparts"]:
             return self.spark.createDataFrame([], FRONTIER_SCHEMA)
         paths = [
-            os.path.join(self._frontier_round_dir(ver), f"fpart={v}")
-            for v, ver in sorted(fmap.items())
+            os.path.join(
+                self._frontier_round_dir(ver, entry["frontier"]), f"fpart={v}"
+            )
+            for v, ver in sorted(entry["fparts"].items(), key=lambda kv: int(kv[0]))
         ]
         return self.spark.read.schema(FRONTIER_SCHEMA).parquet(*paths)
 
-    def read_bloom(self, round_id: int) -> DataFrame:
-        return self.spark.read.schema(BLOOM_SCHEMA).parquet(
-            self._p("bloom", round_id)
-        )
-
-    def read_probe(self, round_id: int, config: CrawlConfig) -> DataFrame:
+    def _read_probe_dir(self, rel: str, config: CrawlConfig | None = None):
         """Probe-layer state with the schema config.probe dictates (the
         'bloom' table dir holds cuckoo tables in cuckoo mode)."""
-        return self.spark.read.schema(probe_state_schema(config)).parquet(
-            self._p("bloom", round_id)
+        schema = BLOOM_SCHEMA if config is None else probe_state_schema(config)
+        return self.spark.read.schema(schema).parquet(os.path.join(self.root, rel))
+
+    def read_bloom(self, round_id: int) -> DataFrame:
+        return self._read_probe_dir(self._round(round_id, "probe state")["bloom"])
+
+    def read_probe(self, round_id: int, config: CrawlConfig) -> DataFrame:
+        return self._read_probe_dir(
+            self._round(round_id, "probe state")["bloom"], config
         )
 
     def _delta_paths(self, table: str, upto_round: int) -> list[str]:
@@ -547,7 +558,11 @@ class StateStore:
         ]
 
     def read_seen(self, upto_round: int) -> DataFrame:
-        paths = self._delta_paths("seen_delta", upto_round)
+        seen = (self._doc() or {"seen": {}})["seen"]
+        paths = [
+            os.path.join(self.root, p)
+            for r, p in seen.items() if int(r) <= upto_round
+        ]
         if not paths:
             return self.spark.createDataFrame([], SEEN_SCHEMA)
         return self.spark.read.schema(SEEN_SCHEMA).parquet(*paths)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import io
 import sys
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
@@ -199,7 +200,13 @@ def main():
         [(f"http://h{i % 40:04d}.test/p{i}.html", i, i, 0) for i in range(500)],
         SEEN_SCHEMA,
     )
-    seed_seen.write.parquet(sstore._p("seen_delta", 0))
+    # commit the seed seen set as round 0 (the bucketed table is written
+    # with the round, exactly as the crawl writes it)
+    with ThreadPoolExecutor(4) as pool:
+        sstore.write_round(
+            0, cfg, frontier=frontier, bloom=bloom, seen_delta=seed_seen,
+            robots_delta=empty_robots(spark), submit=pool.submit,
+        )
     bucketed_seen = sstore.read_seen_bucketed(0, cfg)
     cand = frontier.select("url_canon", "url_hash64", "hash32", "host", "depth")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -57,10 +57,11 @@ def test_kill_after_commit_resumes_identically(
     import os
 
     fpart = min(store_b.frontier_map(1))
-    for d in (
+    junk = (
         os.path.join(root_b, "frontier_rounds", "round=2", f"fpart={fpart}"),
         os.path.join(root_b, "seen_delta", "round=2"),
-    ):
+    )
+    for d in junk:
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "junk"), "w") as f:
             f.write("partial write from a crashed attempt")
@@ -87,6 +88,9 @@ def test_kill_after_commit_resumes_identically(
         .collect()
     )
     assert fr_a == fr_b
+    # the resumed round-2 commit replaced the crashed attempt's junk
+    for d in junk:
+        assert not os.path.exists(os.path.join(d, "junk"))
 
 
 def test_read_frontier_outside_retained_window_raises(reference_run):
@@ -152,8 +156,12 @@ def test_untouched_frontier_partitions_not_rewritten(
 
     # one bucket per round: round 2's revisit partition (ts2+period) and
     # round 3's (ts3+period) are DIFFERENT buckets, so round 3 must carry
-    # round 2's revisit partition over untouched
-    cfg = dataclasses.replace(test_config, frontier_part_rounds=1)
+    # round 2's revisit partition over untouched. A tiny salt target makes
+    # every round with a backlog write host salts (the schedule is
+    # salt-invariant), so their retention is checked below.
+    cfg = dataclasses.replace(
+        test_config, frontier_part_rounds=1, salt_group_target=1
+    )
     root = str(tmp_path_factory.mktemp("fparts"))
     job, seeds, store = _mk_job(spark, tiny_web, cfg, root)
     job.run(seeds, 2)
@@ -184,6 +192,33 @@ def test_untouched_frontier_partitions_not_rewritten(
         assert before.get(path) == meta, f"rewritten: {path}"
     # and the round DID write something (touched partitions exist)
     assert any(ver == 3 for ver in map3.values())
+
+    # every directory under the root is one the live commit or the
+    # retained one names: their frontier versions, probe states and host
+    # salts; every committed seen delta; one bucketed table; the
+    # append-only round tables. Round 3 is the first with host salts, so
+    # two more rounds move it out of the window.
+    def listed(*parts):
+        return sorted(os.listdir(os.path.join(root, *parts)))
+
+    assert listed("host_salts") == ["round=3"]
+    job.run(seeds, 5)
+    assert listed() == sorted([
+        "manifest.json", "frontier_rounds", "bloom", "seen_delta",
+        "seen_bucketed", "robots_delta", "fetched", "links", "metrics",
+        "host_salts",
+    ])
+    assert listed("bloom") == ["round=4", "round=5"]
+    assert set(listed("host_salts")) <= {"round=4", "round=5"}
+    assert listed("seen_delta") == [f"round={r}" for r in range(6)]
+    on_disk = {
+        (int(rd.split("=")[1]), int(pd.split("=")[1]))
+        for rd in listed("frontier_rounds")
+        for pd in listed("frontier_rounds", rd) if pd.startswith("fpart=")
+    }
+    assert on_disk == {
+        (ver, v) for r in (4, 5) for v, ver in store.frontier_map(r).items()
+    }
 
 
 def test_seen_bucketed_survives_catalog_loss(
@@ -238,6 +273,36 @@ def test_seen_bucketed_survives_catalog_loss(
     assert final == {
         r["url_canon"] for r in store3.read_seen(N_ROUNDS).collect()
     }
+
+    # a resume under a different bucket count rewrites the bucketed table
+    # at the new count (a fresh generation) and the crawl still matches
+    # the oracle
+    import dataclasses
+
+    from aspseek_spark.oracle.model_crawler import crawl, load_fixture_dicts
+
+    cfg4 = dataclasses.replace(test_config, seen_buckets=4)
+    job4, seeds4, store4 = _mk_job(spark, tiny_web, cfg4, root)
+    job4.run(seeds4, N_ROUNDS + 1)
+    desc = spark.sql(
+        f"DESCRIBE TABLE EXTENDED {store4._seen_bkt_name}"
+    ).collect()
+    assert {r["col_name"]: r["data_type"] for r in desc}["Num Buckets"] == "4"
+    seen4 = {r["url_canon"] for r in store4.read_seen(N_ROUNDS + 1).collect()}
+    assert seen4 == {
+        r["url_canon"]
+        for r in store4.read_seen_bucketed(N_ROUNDS + 1, cfg4).collect()
+    }
+    ora = crawl(*load_fixture_dicts(tiny_web), cfg4, N_ROUNDS + 1)
+    assert seen4 == ora.seen
+    assert sorted(
+        tuple(r) for r in store4.read_fetched(N_ROUNDS + 1).select(
+            "round", "sched_unix", "host", "url_canon", "status"
+        ).collect()
+    ) == sorted(
+        (f.round, f.sched_unix, f.host, f.url_canon, f.status)
+        for f in ora.fetches
+    )
 
 
 def test_tag_subset_filter(spark, tiny_web, test_config, tmp_path_factory):
